@@ -54,7 +54,9 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from big_data_project_spark import registry
-from big_data_project_spark.session import get_spark
+from big_data_project_spark.session import get_spark, snapshot_rdd_ids
+# perfbench/loop.py and the probes import the release by this name
+from big_data_project_spark.session import release as free_new_rdds
 
 # Headline set: one per major operator family. Kept in sync with SURVEY §2.
 HEADLINE = [
@@ -220,24 +222,6 @@ def _extra_rows():
         "x51_pagerank_x4": lambda spark, sf_dir: replicated_pagerank(
             spark, sf_dir, factor=4),
     }
-
-
-def snapshot_rdd_ids(spark) -> set:
-    """IDs of currently persisted RDDs (includes localCheckpoint blocks,
-    which spark.catalog.clearCache() does NOT release)."""
-    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
-
-
-def free_new_rdds(spark, before: set) -> int:
-    """Unpersist every persisted RDD not present in ``before`` (the
-    delta-based cleanup between bench rows — ADVICE r07: x61/x62
-    localCheckpoint d²-cell frames per invocation and nothing else ever
-    frees them).  Returns how many were released."""
-    leaked = spark.sparkContext._jsc.getPersistentRDDs()
-    new_ids = [r for r in leaked.keySet() if r not in before]
-    for rid in new_ids:
-        leaked.get(rid).unpersist()
-    return len(new_ids)
 
 
 def _foreign_jvms() -> int:
@@ -455,9 +439,9 @@ def main() -> None:
     timings: dict[str, float] = {}
     for name in names:
         # clearCache below drops DataFrame caches but NOT localCheckpoint
-        # RDD blocks — free each row's leftovers after timing so min-of-N
-        # reruns and the long bench session don't accumulate them
-        # (delta-based: anything persisted before this row survives).
+        # RDD blocks or temp views — free each row's leftovers after
+        # timing so min-of-N reruns and the long bench session don't
+        # accumulate them (anything persisted before this row survives).
         before_rdds = snapshot_rdd_ids(spark)
         qs[name](spark, sf_dir).count()  # warm-up: codegen + JIT compile
         spark.catalog.clearCache()  # timed runs must recompute, not read cache

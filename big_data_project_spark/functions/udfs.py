@@ -20,6 +20,7 @@ from pyspark.sql.types import DoubleType
 
 from big_data_project_spark.io import load_table
 from big_data_project_spark.registry import query
+from big_data_project_spark.session import temp_view
 
 # --- X1: scalar (vectorized) pandas UDF ------------------------------------
 
@@ -82,9 +83,9 @@ def x4_udtf_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spark.udtf.register("x4_tokenize", Tokenize)
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
-    d.select("doc_id", "text").createOrReplaceTempView("x4_docs")
+    docs = temp_view(d.select("doc_id", "text"), "x4_docs")
     return spark.sql(
-        "SELECT t.doc_id, t.token, t.pos FROM x4_docs, LATERAL x4_tokenize(doc_id, text) t"
+        f"SELECT t.doc_id, t.token, t.pos FROM {docs}, LATERAL x4_tokenize(doc_id, text) t"
     )
 
 

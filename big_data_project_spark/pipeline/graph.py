@@ -39,6 +39,7 @@ from big_data_project_spark.pipeline.similarity import (
     _NND_ROUNDS, _nnd_common_ctes, _nnd_round_frames,
 )
 from big_data_project_spark.registry import query
+from big_data_project_spark.session import temp_view
 
 _PR_ITERS = 3
 _PR_DAMP = 0.85
@@ -171,12 +172,14 @@ def _pr_step(edges_deg: DataFrame, ranks: DataFrame, n: DataFrame) -> DataFrame:
     )
 
 
-def _pr_chain_with(spark: SparkSession, edges_deg: DataFrame, deg: DataFrame,
-                   iters: int) -> str:
+def _pr_chain_with(edges_deg: DataFrame, deg: DataFrame,
+                   iters: int) -> tuple[str, str]:
     """Register the cached graph frames as temp views and return the WITH
-    clause unrolling ``iters`` power iterations through ``r{iters}`` —
-    the r19 single-parse form of `_seed_ranks` + the `_pr_step` loop
-    (guide §1.2 driver work, the x67 lesson): one spark.sql analysis
+    clause unrolling ``iters`` power iterations through ``r{iters}``,
+    plus the deg view's name.  The views are `session.temp_view`s:
+    unique names that live until the next release (README.md, "Session
+    resources").  This is the single-parse form of `_seed_ranks` + the
+    `_pr_step` loop (guide §1.2 driver work): one spark.sql analysis
     instead of ~5 eager Dataset re-analyses per iteration, which
     measured ~0.7 s of pure driver build per x51 invocation at sf0.1.
     Bit-identical to the stepwise Column chain: every literal is a
@@ -187,18 +190,18 @@ def _pr_chain_with(spark: SparkSession, edges_deg: DataFrame, deg: DataFrame,
     BROADCAST hints mirror the former F.broadcast(n) cross joins.
     `pagerank_ranks_deep` keeps the stepwise form — its mid-chain
     localCheckpoints need a DataFrame per generation."""
-    edges_deg.createOrReplaceTempView("x51_edges_deg")
-    deg.createOrReplaceTempView("x51_deg")
+    edges_view = temp_view(edges_deg, "x51_edges_deg")
+    deg_view = temp_view(deg, "x51_deg")
     d = _PR_DAMP
     ctes = [
-        "nn AS (SELECT count(*) AS n FROM x51_deg)",
+        f"nn AS (SELECT count(*) AS n FROM {deg_view})",
         "r0 AS (SELECT /*+ BROADCAST(nn) */ src AS node_id,"
-        " round(1.0D / nn.n + 1E-12D, 10) AS r FROM x51_deg CROSS JOIN nn)",
+        f" round(1.0D / nn.n + 1E-12D, 10) AS r FROM {deg_view} CROSS JOIN nn)",
     ]
     for k in range(1, iters + 1):
         ctes.append(
             f"c{k} AS (SELECT e.dst, sum(r.r / e.outdeg) AS contrib"
-            f" FROM x51_edges_deg e JOIN r{k - 1} r ON e.src = r.node_id"
+            f" FROM {edges_view} e JOIN r{k - 1} r ON e.src = r.node_id"
             f" GROUP BY e.dst)"
         )
         ctes.append(
@@ -206,7 +209,7 @@ def _pr_chain_with(spark: SparkSession, edges_deg: DataFrame, deg: DataFrame,
             f" round((1.0D - {d}D) / nn.n + {d}D * c.contrib + 1E-12D, 10) AS r"
             f" FROM c{k} c CROSS JOIN nn)"
         )
-    return "WITH " + ",\n".join(ctes)
+    return "WITH " + ",\n".join(ctes), deg_view
 
 
 def pagerank_ranks_deep(
@@ -253,10 +256,8 @@ def replicated_pagerank_ranks(
     frame after ``_PR_ITERS`` generations; copy k's node ids live at
     k·_REP_OFFSET + original id.  Same cache contract as x51."""
     edges_deg, deg, _n = _graph_frames(spark, sf_dir, factor=factor)
-    return spark.sql(
-        _pr_chain_with(spark, edges_deg, deg, _PR_ITERS)
-        + f" SELECT node_id, r FROM r{_PR_ITERS}"
-    )
+    chain, _deg_view = _pr_chain_with(edges_deg, deg, _PR_ITERS)
+    return spark.sql(chain + f" SELECT node_id, r FROM r{_PR_ITERS}")
 
 
 def replicated_pagerank(spark: SparkSession, sf_dir: str, factor: int = 4) -> DataFrame:
@@ -341,13 +342,10 @@ def x51_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Cache contract: this builder persists ONE |E|-scale intermediate
     (the degree-annotated edge frame) plus the |V|-bounded derived deg
-    frame, both filled lazily inside the caller's terminal action.  The
-    registered entry point clearCache()s on entry, so driver/registry
-    runs never accumulate them; callers composing the raw builder
-    outside the registry own cleanup — run
-    ``spark.catalog.clearCache()`` (or unpersist BOTH frames) after the
-    terminal action, the `_train_centroids` convention
-    (pipeline/similarity.py)."""
+    frame, both filled lazily inside the caller's terminal action, and
+    registers a temp view over each.  The next registered entry point
+    releases all four; callers composing the raw builder run it inside
+    ``session.scope`` (README.md, "Session resources")."""
     edges_deg, deg, _n = _graph_frames(spark, sf_dir)
     # The rank chain is LINEAR (each generation feeds exactly one join),
     # so nothing is ever re-derived and per-generation materialization
@@ -361,15 +359,16 @@ def x51_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tests/test_scale_runtime.py).  r19: the chain builds as one
     # spark.sql parse (see _pr_chain_with) — same plan shape, same
     # 10-decimal values, ~0.7 s less driver build per invocation.
+    chain, deg_view = _pr_chain_with(edges_deg, deg, _PR_ITERS)
     return spark.sql(
-        _pr_chain_with(spark, edges_deg, deg, _PR_ITERS) + f"""
+        chain + f"""
         SELECT concat(CASE WHEN r.node_id % 2 = 0 THEN 'c' ELSE 's' END,
                       CAST(shiftright(CAST(r.node_id AS BIGINT), 1) AS STRING))
                  AS node_id,
                round(r.r + 1E-9D, 6) AS pagerank,
                d.outdeg AS degree
         FROM r{_PR_ITERS} r
-        JOIN x51_deg d ON r.node_id = d.src
+        JOIN {deg_view} d ON r.node_id = d.src
         ORDER BY pagerank DESC, node_id
         LIMIT 25
         """
@@ -929,9 +928,10 @@ def x67_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     node set (one broadcast hash join against the brand-filtered part
     dim, pushdown-pruned).  Cache contract: persists the out-weight-
     annotated edge frame, the |V|-bounded derived wdeg frame, and the
-    |S|-bounded teleport frame; the registry entry point clearCache()s
-    on entry, composing callers own cleanup (unpersist all three, or
-    ``spark.catalog.clearCache()``)."""
+    |S|-bounded teleport frame, with a temp view over each; the next
+    registered entry point releases them, and composing callers run the
+    raw builder inside ``session.scope`` (README.md, "Session
+    resources")."""
     d = _PPR_DAMP
     # Pre-partition the cached edge frame on the round-join key u (and
     # sort within partitions): the x51 co-partitioned layout — the
@@ -988,20 +988,22 @@ def x67_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # left-associated addition, so results are bit-identical to the
     # former Column chain.  BROADCAST hints keep the teleport joins
     # broadcast exactly as F.broadcast did.
-    edges_w.createOrReplaceTempView("x67_edges_w")
-    wdeg.createOrReplaceTempView("x67_wdeg")
-    tp.createOrReplaceTempView("x67_tp")
-    ctes = ["r0 AS (SELECT node AS node_id, p AS r FROM x67_tp)"]
+    # The views are `session.temp_view`s: unique names that live until
+    # the next release (README.md, "Session resources").
+    edges_view = temp_view(edges_w, "x67_edges_w")
+    wdeg_view = temp_view(wdeg, "x67_wdeg")
+    tp_view = temp_view(tp, "x67_tp")
+    ctes = [f"r0 AS (SELECT node AS node_id, p AS r FROM {tp_view})"]
     for k in range(1, _PPR_ITERS + 1):
         ctes.append(
             f"c{k} AS (SELECT e.v, sum(r.r * e.w / e.wout) AS contrib\n"
-            f"  FROM x67_edges_w e JOIN r{k - 1} r ON e.u = r.node_id GROUP BY e.v)"
+            f"  FROM {edges_view} e JOIN r{k - 1} r ON e.u = r.node_id GROUP BY e.v)"
         )
         ctes.append(
             f"r{k} AS (SELECT /*+ BROADCAST(t) */ c.v AS node_id,\n"
             f"  round((1.0D - {d}D) * coalesce(t.p, 0.0D) + {d}D * c.contrib"
             f" + 1E-12D, 10) AS r\n"
-            f"  FROM c{k} c LEFT JOIN x67_tp t ON c.v = t.node)"
+            f"  FROM c{k} c LEFT JOIN {tp_view} t ON c.v = t.node)"
         )
     return spark.sql(
         "WITH " + ",\n".join(ctes) + f"""
@@ -1010,8 +1012,8 @@ def x67_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                w.wout AS wdeg,
                CAST(CASE WHEN t.node IS NULL THEN 0 ELSE 1 END AS INT) AS is_seed
         FROM r{_PPR_ITERS} r
-        JOIN x67_wdeg w ON r.node_id = w.u
-        LEFT JOIN x67_tp t ON r.node_id = t.node
+        JOIN {wdeg_view} w ON r.node_id = w.u
+        LEFT JOIN {tp_view} t ON r.node_id = t.node
         ORDER BY ppr DESC, part_key
         LIMIT 25
         """

@@ -1882,12 +1882,11 @@ def _dense_gsym(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells exist and ``array_sort`` over the unique (i, j) keys is exactly
     the row-major layout.
 
-    Checkpoint-lifetime note (ADVICE r07): spark.catalog.clearCache()
-    does NOT free localCheckpoint RDD blocks, so repeated invocations in
-    one long session accumulate them.  The footprint is d² doubles
-    (~33 KB at d=64) per call — bounded and tiny — and bench.py frees
-    each query's leftover checkpoint RDDs between rows via the
-    delta-based getPersistentRDDs pattern."""
+    Checkpoint-lifetime note: spark.catalog.clearCache() does NOT free
+    localCheckpoint RDD blocks, so repeated raw invocations in one long
+    session accumulate them.  The footprint is d² doubles (~33 KB at
+    d=64) per call — bounded and tiny — and `session.release` frees
+    them (README.md, "Session resources")."""
     gram = x59_embedding_gram(spark, sf_dir)
     # Mirror the upper triangle with an explode over one pass, NOT
     # gram.unionByName(gram.filter(...)): a self-union re-plans the whole

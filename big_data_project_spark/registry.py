@@ -29,6 +29,8 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
+from big_data_project_spark.session import release, snapshot_rdd_ids
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
@@ -72,53 +74,6 @@ _MODULES = (
     "big_data_project_spark.operators.windows",
 )
 
-# Names guaranteed a slot at the head of the registry (right after the
-# flagship smoke query) — but ONLY until they earn a green driver row; once
-# green they demote like any other verified query, so a stale _FRONT list
-# can never burn slots in the ~50-query verification window (r02 lost 8
-# slots to exactly that).
-_FRONT = (
-    "f1_math_functions",       # r02 hash-FAIL — oracle now CASTs floor/ceil
-    "t9_stream_stream_join",   # r02 err — NTZ normalize in io.load_table
-    # (r06: the five r04-deferral pins — x32..x35, x8_ivf_trained_topk —
-    # removed; each earned its green row in CORRECTNESS_r05.)
-)
-
-# Names whose existing green row is STALE (earned before a breaking change,
-# now re-fixed): pin (name, stale_through_round) into the window even though
-# green.  The pin dissolves by itself once the driver records ANY row in a
-# round AFTER stale_through_round — no manual cleanup next round.
-_REVERIFY = (
-    ("w2_lag_lead", 2),        # r01 green, broken by NTZ fixtures, fixed r03
-    ("w7_range_frame", 2),
-    # (r09: the r08 x61_pca_project pin removed — its fresh stamp landed
-    # in CORRECTNESS_r08, dissolving the pin.)
-)
-
-# Oracle-backed queries added AFTER this round's verification window was
-# packed: rank them behind the never-seen rows-only bucket so they wait for
-# the next round's window instead of displacing the debt being closed now.
-# The deferral is self-dissolving — once the driver records any row, the
-# normal rules apply.
-_DEFER: tuple[str, ...] = (
-    # (r06: emptied.  The r05 deferrals — x32..x35, x8_ivf_trained_topk —
-    # earned green rows in CORRECTNESS_r05 and the 12 late-r05 additions
-    # now rank tier-3 by registration order, first in the r06 window.)
-)
-
-# Rows-only queries worth the window's leftover slots first (VERDICT r03 #3):
-# the reference-vertical demonstrators and the non-SQL sources, ahead of the
-# RNG/sketch invariant checks whose pytest coverage is already strong.
-_ROWS_PRIORITY = (
-    "s14_python_datasource",
-    # s3_binary_npz_scan left this list in r05: the deterministic-formula
-    # content upgrade gave it a full SQL oracle
-    "x2_gaussian_smooth",
-    "x3_model_inference",
-    "raster_forecast_pipeline",
-    "raster_training_loop",
-)
-
 
 def _driver_verified(root: Path | None = None) -> tuple[set[str], set[str], dict[str, int]]:
     """Scan the driver's CORRECTNESS_r*.json files (repo root) and return
@@ -126,12 +81,9 @@ def _driver_verified(root: Path | None = None) -> tuple[set[str], set[str], dict
     names with any driver row at all, and the latest round number each name
     was checked in.
 
-    Green follows the latest row, not any row: a query that passed in r01
+    Green follows the latest row, not any row: a query that passed once
     but failed (or errored) when the driver last re-checked it demotes back
-    into the verification window automatically.  Sticky green was the r02
-    failure mode — w2/w7 regressed under a fixture-type change and needed
-    manual _REVERIFY pins; latest-row semantics makes that self-healing
-    (the pins remain only for green rows the driver hasn't re-checked yet).
+    into the verification window automatically.
 
     The driver verifies only the first ~50 registry entries per round, so
     insertion order IS the verification budget.  Reading the driver's own
@@ -168,56 +120,31 @@ def _driver_verified(root: Path | None = None) -> tuple[set[str], set[str], dict
 
 
 def _ordered(names: list[str]) -> list[str]:
-    """Order queries for the driver: flagship smoke first, then the pinned
-    front list, then driver-unverified oracle-backed queries, then rows-only
-    queries the driver has never recorded, then everything already green —
-    the green tail sorted OLDEST-verified-first so the leftover window slots
-    rotate through stale greens (a r01 green whose code has since been
-    touched gets re-stamped before a r04 green gets a redundant third row)."""
+    """Order queries for the driver: flagship smoke first, then
+    driver-unverified oracle-backed queries, then rows-only queries the
+    driver has never recorded, then everything already green — the green
+    tail sorted OLDEST-verified-first so the leftover window slots rotate
+    through stale greens."""
     green, seen, last_round = _driver_verified()
-    front_rank = {n: i for i, n in enumerate(_FRONT)}
-    reverify_rank = {n: (i, through) for i, (n, through) in enumerate(_REVERIFY)}
     reg_rank = {n: i for i, n in enumerate(names)}
-    rows_rank = {n: i for i, n in enumerate(_ROWS_PRIORITY)}
-    defer_rank = {n: i for i, n in enumerate(_DEFER)}
 
     def key(n: str) -> tuple[int, int, int]:
         if n == "flagship_pricing_summary":
             return (0, 0, 0)
-        if n in front_rank and n not in green:
-            return (1, 0, front_rank[n])
-        if n in reverify_rank and last_round.get(n, 0) <= reverify_rank[n][1]:
-            return (2, 0, reverify_rank[n][0])
-        if n in defer_rank and n not in seen:
-            return (4, 0, 1_000_000 + defer_rank[n])
         if n in ORACLES and n not in green:
-            return (3, 0, reg_rank[n])
+            return (1, 0, reg_rank[n])
         if n not in ORACLES and n not in seen:
-            return (4, 0, rows_rank.get(n, len(_ROWS_PRIORITY) + reg_rank[n]))
-        return (5, last_round.get(n, 0), reg_rank[n])
+            return (2, 0, reg_rank[n])
+        return (3, last_round.get(n, 0), reg_rank[n])
 
     return sorted(names, key=key)
 
+
 _loaded = False
 
-
-# RDD ids created inside a prior registered entry point, snapshotted as the
-# before/after delta around each call.  The NEXT entry point releases exactly
-# these — the localCheckpoint blocks clearCache cannot reach (ADVICE r16) —
-# and nothing else, so an RDD a CALLER persisted or checkpointed outside any
-# entry point is never destroyed (ADVICE r17: the blanket sweep silently
-# truncated caller-owned checkpoint lineage, which — unlike a cache
-# unpersist, whose lineage recomputes — is irrecoverable).  Remaining caveat,
-# documented rather than fixable without collect hooks: a frame RETURNED by
-# entry point A that depends on A's own checkpoint blocks must be collected
-# before entry point B runs; the driver's run-then-collect loop guarantees
-# this, and library callers wanting frames that survive across queries should
-# compose the raw (undecorated) functions instead.
-_SWEEP_PENDING: set[int] = set()
-
-
-def _persistent_rdd_ids(spark: SparkSession) -> set[int]:
-    return {int(r) for r in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+# RDD ids the last registered entry point persisted; the next entry point
+# releases them (see `query`).
+_PENDING: set[int] = set()
 
 
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
@@ -225,23 +152,19 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 
     ``oracle=None`` declares a rows-only check (non-SQL-expressible op).
 
-    The registered entry point clears leftover cached frames before
-    building its plan: several queries persist() intermediates for
-    diamond lineages and the returned (lazy) DataFrame outlives the call,
-    so caches accumulate across a 50-query driver run.  Worse, Spark's
-    CacheManager substitutes cached frames into LATER queries by
-    logical-plan equality — an InMemoryTableScan from query A can mask
-    the join strategy of query B's identical subplan, flipping plan
-    contracts order-dependently.  Entry-point clearCache keeps every
-    query's plan and memory footprint self-contained; the raw function
-    (returned undecorated) composes internally without the reset.
-
-    localCheckpoint RDD blocks — which clearCache does NOT release — are
-    swept as a DELTA: each entry point records the RDD ids it newly
-    persisted (``_SWEEP_PENDING``) and the next entry point unpersists
-    only those, leaving caller-owned checkpoints intact (clearCache on a
-    caller's cached frame merely forces a recompute; unpersisting a
-    caller's checkpoint block would break it permanently).
+    The registered entry point first releases what the previous entry
+    point left behind (`session.release`): every cached frame, the views
+    registered through `session.temp_view`, and the RDDs the previous entry
+    point persisted, localCheckpoint blocks included.  Returned frames are
+    lazy and outlive the call, so without this caches pile up across a
+    run of many queries, and Spark's CacheManager would substitute query
+    A's cached frames into a later query B with an equal subplan,
+    changing B's plan.
+    RDDs persisted outside any entry point are left alone: unpersisting a
+    caller's checkpoint block would break its frame for good.  A frame
+    returned by an entry point must therefore be collected before the next
+    entry point runs; library callers composing frames across queries use
+    the raw (undecorated) functions inside `session.scope`.
     """
 
     def deco(fn: QueryFn) -> QueryFn:
@@ -250,30 +173,11 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 
         @functools.wraps(fn)
         def entry_point(spark: SparkSession, sf_dir: str, *args, **kwargs):
-            # py4j JavaSet iteration costs ~50 ms per call EVEN WHEN EMPTY
-            # (iterator roundtrips) while Map.size() is <1 ms — the r18
-            # bench caught the unguarded 3-iteration version inflating
-            # every sub-second row by ~0.1 s.  Iterate only when size()
-            # says there is something to look at; the common case (no
-            # persistent RDDs anywhere) pays two size() probes.
             before: set[int] | None = None
             try:
-                spark.catalog.clearCache()
-                jrdds = spark.sparkContext._jsc.getPersistentRDDs()
-                if jrdds.size() > 0:
-                    if _SWEEP_PENDING:
-                        for rid in list(jrdds.keySet()):
-                            if int(rid) in _SWEEP_PENDING:
-                                jrdds.get(rid).unpersist()
-                        jrdds = spark.sparkContext._jsc.getPersistentRDDs()
-                    before = (
-                        {int(r) for r in jrdds.keySet()}
-                        if jrdds.size() > 0
-                        else set()
-                    )
-                else:
-                    before = set()
-                _SWEEP_PENDING.clear()
+                before = snapshot_rdd_ids(spark) - _PENDING
+                release(spark, before)
+                _PENDING.clear()
             except Exception:
                 pass  # never let cleanup mask the query itself
             try:
@@ -281,11 +185,7 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
             finally:
                 if before is not None:
                     try:
-                        jr2 = spark.sparkContext._jsc.getPersistentRDDs()
-                        if jr2.size() > 0:
-                            _SWEEP_PENDING.update(
-                                {int(r) for r in jr2.keySet()} - before
-                            )
+                        _PENDING.update(snapshot_rdd_ids(spark) - before)
                     except Exception:
                         pass
 

@@ -2,7 +2,6 @@ from __future__ import annotations
 
 import os
 import sys
-from contextlib import contextmanager
 
 import pytest
 
@@ -16,6 +15,9 @@ SF_DIR_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.
 
 @pytest.fixture(scope="session")
 def spark():
+    # The fixtures are megabytes; get_spark's 16g default heap lets the JVM
+    # grow past the physical memory of a 16 GB host over a full suite run.
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", "8g")
     s = get_spark(app_name="bdp-spark-tests", shuffle_partitions=8)
     yield s
 
@@ -23,24 +25,3 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
-
-
-@contextmanager
-def checkpoint_rdd_guard(spark):
-    """Delta-based localCheckpoint cleanup for tests that build
-    checkpointed round frames (x88 NN-descent and its consumers):
-    ``spark.catalog.clearCache()`` does NOT release localCheckpoint RDD
-    blocks (similarity.py's own cache-contract note), so on a shared
-    session fixture each chain run would leak its per-round blocks for
-    the rest of the suite.  Snapshot the persisted-RDD ids on entry,
-    clearCache plus unpersist every NEW id on exit — the same
-    delta-based recipe as ``bench.free_new_rdds``."""
-    jsc = spark.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keySet())
-    try:
-        yield
-    finally:
-        spark.catalog.clearCache()
-        leaked = jsc.getPersistentRDDs()
-        for rid in [r for r in leaked.keySet() if r not in before]:
-            leaked.get(rid).unpersist()

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from big_data_project_spark import registry
+from big_data_project_spark.session import scope
 from big_data_project_spark.pipeline.dedup import (
     lsh_candidate_pairs, minhash_signatures, shingled_docs,
 )
@@ -2311,25 +2312,25 @@ def test_knn_graph_walks_chain_parity_and_replay(spark):
     replay EXACTLY in pure Python over the SAME final k-NN frame the
     x88 replay test verifies — walks, window pairs, AND the
     is_knn_edge annotation.  The whole body runs under
-    ``checkpoint_rdd_guard``: each chain run localCheckpoints the
+    ``session.scope``: each chain run localCheckpoints the
     NN-descent round frames, and clearCache() alone would leak those
     blocks into the shared session for the rest of the suite."""
     from big_data_project_spark import registry
     from big_data_project_spark.pipeline.graph import knn_graph_walk_pairs
     from big_data_project_spark.pipeline.similarity import _nnd_round_frames
-    from tests.conftest import SF_DIR, SF_DIR_ORACLE, checkpoint_rdd_guard
+    from tests.conftest import SF_DIR, SF_DIR_ORACLE
     from tests.oracle_harness import compare, duckdb_connect
 
     registry.load()
     oracle = registry.ORACLES["x89_knn_graph_walks"]
     for sf in (SF_DIR, SF_DIR_ORACLE):
-        with checkpoint_rdd_guard(spark):
+        with scope(spark):
             con = duckdb_connect(sf)
             df = knn_graph_walk_pairs(spark, sf)
             res = compare("x89_knn_graph_walks", df, con, oracle)
             assert res.ok, (sf, res.detail, res.mismatches[:3])
 
-    with checkpoint_rdd_guard(spark):
+    with scope(spark):
         _, rounds = _nnd_round_frames(spark, SF_DIR)
         kedges = {(r.a, r.b) for r in rounds[-1].collect()}
         adj: dict[int, set[int]] = {}
@@ -2470,22 +2471,22 @@ def test_sgns_train_step_parity_and_replay(spark):
     v_in, and v1 = v0 wherever the gradient is zero."""
     from big_data_project_spark import registry
     from big_data_project_spark.pipeline.graph import _SG_DIM, sgns_train_step
-    from tests.conftest import SF_DIR, SF_DIR_ORACLE, checkpoint_rdd_guard
+    from tests.conftest import SF_DIR, SF_DIR_ORACLE
     from tests.oracle_harness import compare, duckdb_connect
 
     registry.load()
     oracle = registry.ORACLES["x92_sgns_train_step"]
-    # checkpoint_rdd_guard, not bare clearCache: _sgns_inputs/_sgns_step
+    # session.scope, not bare clearCache: _sgns_inputs/_sgns_step
     # localCheckpoint, and those RDD blocks would otherwise leak into the
-    # shared session fixture for the rest of the suite (ADVICE r15).
+    # shared session fixture for the rest of the suite.
     for sf in (SF_DIR, SF_DIR_ORACLE):
-        with checkpoint_rdd_guard(spark):
+        with scope(spark):
             con = duckdb_connect(sf)
             df = sgns_train_step(spark, sf)
             res = compare("x92_sgns_train_step", df, con, oracle)
             assert res.ok, (sf, res.detail, res.mismatches[:3])
 
-    with checkpoint_rdd_guard(spark):
+    with scope(spark):
         ex, nodes, vin, vout = _replay_sgns_setup(spark)
         ginr, goutr, vin1, vout1 = _replay_sgns_step(ex, vin, vout)
 
@@ -2611,18 +2612,18 @@ def test_sgns_epoch_parity_replay_and_trajectory(spark):
     from big_data_project_spark.pipeline.graph import (
         _SG_DIM, _sgns_epoch_oracle, sgns_train_epoch, sgns_train_step,
     )
-    from tests.conftest import SF_DIR, SF_DIR_ORACLE, checkpoint_rdd_guard
+    from tests.conftest import SF_DIR, SF_DIR_ORACLE
     from tests.oracle_harness import compare, duckdb_connect
 
     oracle = _sgns_epoch_oracle()
     for sf in (SF_DIR, SF_DIR_ORACLE):
-        with checkpoint_rdd_guard(spark):
+        with scope(spark):
             con = duckdb_connect(sf)
             df = sgns_train_epoch(spark, sf)
             res = compare("x93_sgns_train_epoch", df, con, oracle)
             assert res.ok, (sf, res.detail, res.mismatches[:3])
 
-    with checkpoint_rdd_guard(spark):
+    with scope(spark):
         ex, nodes, vin, vout = _replay_sgns_setup(spark)
         _gi1, _go1, vin1, vout1 = _replay_sgns_step(ex, vin, vout)
         _gi2, _go2, vin2, vout2 = _replay_sgns_step(ex, vin1, vout1)
@@ -2691,18 +2692,18 @@ def test_sgns_epoch_metrics_parity_replay_and_descent(spark):
     from big_data_project_spark.pipeline.graph import (
         _sgns_metrics_oracle, sgns_epoch_metrics,
     )
-    from tests.conftest import SF_DIR, SF_DIR_ORACLE, checkpoint_rdd_guard
+    from tests.conftest import SF_DIR, SF_DIR_ORACLE
     from tests.oracle_harness import compare, duckdb_connect
 
     oracle = _sgns_metrics_oracle()
     for sf in (SF_DIR, SF_DIR_ORACLE):
-        with checkpoint_rdd_guard(spark):
+        with scope(spark):
             con = duckdb_connect(sf)
             df = sgns_epoch_metrics(spark, sf)
             res = compare("x94_sgns_epoch_metrics", df, con, oracle)
             assert res.ok, (sf, res.detail, res.mismatches[:3])
 
-    with checkpoint_rdd_guard(spark):
+    with scope(spark):
         ex, _nodes, vin, vout = _replay_sgns_setup(spark)
         traj = [(vin, vout)]
         for _ in range(2):
@@ -2785,18 +2786,18 @@ def test_sgns_adam_epoch_parity_replay_and_state(spark):
     from big_data_project_spark.pipeline.graph import (
         _SG_DIM, _sgns_adam_oracle, sgns_adam_epoch,
     )
-    from tests.conftest import SF_DIR, SF_DIR_ORACLE, checkpoint_rdd_guard
+    from tests.conftest import SF_DIR, SF_DIR_ORACLE
     from tests.oracle_harness import compare, duckdb_connect
 
     oracle = _sgns_adam_oracle()
     for sf in (SF_DIR, SF_DIR_ORACLE):
-        with checkpoint_rdd_guard(spark):
+        with scope(spark):
             con = duckdb_connect(sf)
             df = sgns_adam_epoch(spark, sf)
             res = compare("x95_sgns_adam_epoch", df, con, oracle)
             assert res.ok, (sf, res.detail, res.mismatches[:3])
 
-    with checkpoint_rdd_guard(spark):
+    with scope(spark):
         ex, nodes, vin, vout = _replay_sgns_setup(spark)
         (ti, mi, si), (to, mo, so) = _replay_sgns_adam_epoch(ex, vin, vout)
 
@@ -2852,18 +2853,18 @@ def test_sgns_training_end2end_parity_replay_and_contract(spark):
         _SG_DIM, _SG_EPOCH_STEPS, _TE_EPOCHS, _TE_KEEP,
         _sgns_end2end_oracle, sgns_epoch_metrics, sgns_training_end2end,
     )
-    from tests.conftest import SF_DIR, SF_DIR_ORACLE, checkpoint_rdd_guard
+    from tests.conftest import SF_DIR, SF_DIR_ORACLE
     from tests.oracle_harness import compare, duckdb_connect
 
     oracle = _sgns_end2end_oracle()
     for sf in (SF_DIR, SF_DIR_ORACLE):
-        with checkpoint_rdd_guard(spark):
+        with scope(spark):
             con = duckdb_connect(sf)
             df = sgns_training_end2end(spark, sf)
             res = compare("pipeline_sgns_training_end2end", df, con, oracle)
             assert res.ok, (sf, res.detail, res.mismatches[:3])
 
-    with checkpoint_rdd_guard(spark):
+    with scope(spark):
         ex, nodes, vin, vout = _replay_sgns_setup(spark)
         total = _TE_EPOCHS * _SG_EPOCH_STEPS
         traj = [(vin, vout)]
@@ -2938,18 +2939,18 @@ def test_sgns_prediction_snapshots_parity_replay_and_gate(spark):
         _PRED_EVERY, _SG_CLAMP, _SG_DIM, _SG_EPOCH_STEPS, _TE_EPOCHS,
         _sgns_pred_oracle, sgns_prediction_snapshots,
     )
-    from tests.conftest import SF_DIR, SF_DIR_ORACLE, checkpoint_rdd_guard
+    from tests.conftest import SF_DIR, SF_DIR_ORACLE
     from tests.oracle_harness import compare, duckdb_connect
 
     oracle = _sgns_pred_oracle()
     for sf in (SF_DIR, SF_DIR_ORACLE):
-        with checkpoint_rdd_guard(spark):
+        with scope(spark):
             con = duckdb_connect(sf)
             df = sgns_prediction_snapshots(spark, sf)
             res = compare("pipeline_sgns_prediction_snapshots", df, con, oracle)
             assert res.ok, (sf, res.detail, res.mismatches[:3])
 
-    with checkpoint_rdd_guard(spark):
+    with scope(spark):
         ex, _nodes, vin, vout = _replay_sgns_setup(spark)
         state = (vin, vout)
         states = {}
@@ -2999,18 +3000,18 @@ def test_sgns_permuted_batches_parity_replay_and_sparsity(spark):
         _SG_DIM, _SG_EPOCH_STEPS, _sgns_permuted_oracle,
         sgns_permuted_batches,
     )
-    from tests.conftest import SF_DIR, SF_DIR_ORACLE, checkpoint_rdd_guard
+    from tests.conftest import SF_DIR, SF_DIR_ORACLE
     from tests.oracle_harness import compare, duckdb_connect
 
     oracle = _sgns_permuted_oracle()
     for sf in (SF_DIR, SF_DIR_ORACLE):
-        with checkpoint_rdd_guard(spark):
+        with scope(spark):
             con = duckdb_connect(sf)
             df = sgns_permuted_batches(spark, sf)
             res = compare("x96_sgns_permuted_batches", df, con, oracle)
             assert res.ok, (sf, res.detail, res.mismatches[:3])
 
-    with checkpoint_rdd_guard(spark):
+    with scope(spark):
         ex, nodes, vin, vout = _replay_sgns_setup(spark)
         n_batches = _SG_EPOCH_STEPS
         keys = sorted(
@@ -3130,11 +3131,11 @@ def test_nn_descent_parity_convergence_and_replay(spark):
         _NND_K, _NND_ORACLE, _NND_PROBES, _NND_ROUNDS, _NND_SEEDS,
         _nnd_n_blocks, nn_descent_knn_graph,
     )
-    from tests.conftest import SF_DIR, SF_DIR_ORACLE, checkpoint_rdd_guard
+    from tests.conftest import SF_DIR, SF_DIR_ORACLE
     from tests.oracle_harness import compare, duckdb_connect
 
     for sf in (SF_DIR, SF_DIR_ORACLE):
-        with checkpoint_rdd_guard(spark):
+        with scope(spark):
             con = duckdb_connect(sf)
             df = nn_descent_knn_graph(spark, sf)
             res = compare("nn_descent", df, con, _NND_ORACLE)
@@ -3223,7 +3224,7 @@ def test_nn_descent_parity_convergence_and_replay(spark):
             assert len(new) >= len(old), (r, a)
             for (_, ns), (_, os_) in zip(new, old):
                 assert ns >= os_, (r, a, new, old)
-    with checkpoint_rdd_guard(spark):
+    with scope(spark):
         got = [
             (r["round"], r.n_edges, r.mean_sim, r.probe_recall)
             for r in sorted(
@@ -3404,18 +3405,18 @@ def test_sgns_train_and_evaluate_full_fidelity(spark):
     from big_data_project_spark.pipeline.graph import (
         _PRED_EVERY, _sgns_tae_oracle, sgns_train_and_evaluate,
     )
-    from tests.conftest import SF_DIR, SF_DIR_ORACLE, checkpoint_rdd_guard
+    from tests.conftest import SF_DIR, SF_DIR_ORACLE
     from tests.oracle_harness import compare, duckdb_connect
 
     oracle = _sgns_tae_oracle()
     for sf in (SF_DIR, SF_DIR_ORACLE):
-        with checkpoint_rdd_guard(spark):
+        with scope(spark):
             con = duckdb_connect(sf)
             df = sgns_train_and_evaluate(spark, sf)
             res = compare("pipeline_sgns_train_and_evaluate", df, con, oracle)
             assert res.ok, (sf, res.detail, res.mismatches[:3])
 
-    with checkpoint_rdd_guard(spark):
+    with scope(spark):
         ex, nodes, vin, vout = _replay_sgns_setup(spark)
         expected = _replay_tae_expected(ex, nodes, vin, vout)
 
@@ -3559,18 +3560,18 @@ def test_main_ingest_to_training_parity_replay_and_contract(spark):
     from big_data_project_spark.pipeline.graph import (
         _main_oracle, _patch_sgns_inputs, main_ingest_to_training,
     )
-    from tests.conftest import SF_DIR, SF_DIR_ORACLE, checkpoint_rdd_guard
+    from tests.conftest import SF_DIR, SF_DIR_ORACLE
     from tests.oracle_harness import compare, duckdb_connect
 
     oracle = _main_oracle()
     for sf in (SF_DIR, SF_DIR_ORACLE):
-        with checkpoint_rdd_guard(spark):
+        with scope(spark):
             con = duckdb_connect(sf)
             df = main_ingest_to_training(spark, sf)
             res = compare("pipeline_main_ingest_to_training", df, con, oracle)
             assert res.ok, (sf, res.detail, res.mismatches[:3])
 
-    with checkpoint_rdd_guard(spark):
+    with scope(spark):
         ex, nodes, vin, vout = _replay_main_setup()
 
         # composition contract: the ingest leg REALLY fed the example

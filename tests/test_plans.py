@@ -15,6 +15,7 @@ from big_data_project_spark.plans.contracts import (
     read_schemas,
 )
 from big_data_project_spark.registry import all_queries
+from big_data_project_spark.session import scope
 
 SF = "/root/testdata/sf0.001"
 
@@ -1504,9 +1505,8 @@ def test_knn_graph_walks_plan(spark):
         _DW_STEPS, knn_graph_walk_pairs,
     )
     from big_data_project_spark.plans.contracts import plan_str
-    from tests.conftest import checkpoint_rdd_guard
 
-    with checkpoint_rdd_guard(spark):  # the chain localCheckpoints per round
+    with scope(spark):  # the chain localCheckpoints per round
         df = knn_graph_walk_pairs(spark, SF)
         text = plan_str(df, "formatted")
         assert "TakeOrderedAndProject" in text
@@ -1749,9 +1749,8 @@ def test_nn_descent_census_plan_is_lineage_truncated(spark):
         _NND_ROUNDS, nn_descent_knn_graph,
     )
     from big_data_project_spark.plans.contracts import plan_str
-    from tests.conftest import checkpoint_rdd_guard
 
-    with checkpoint_rdd_guard(spark):  # the rounds localCheckpoint
+    with scope(spark):  # the rounds localCheckpoint
         df = nn_descent_knn_graph(spark, SF)
         text = plan_str(df, "formatted")
         assert text.count("Scan ExistingRDD") >= _NND_ROUNDS + 2, (
@@ -1939,9 +1938,8 @@ def test_sgns_epoch_plan_constant_in_steps(spark):
     from big_data_project_spark.plans.contracts import (
         num_shuffles_steady, plan_str, prune_cached_subtrees,
     )
-    from tests.conftest import checkpoint_rdd_guard
 
-    with checkpoint_rdd_guard(spark):
+    with scope(spark):
         len1 = len(plan_str(sgns_train_epoch(spark, SF, steps=1), "simple"))
         df3 = sgns_train_epoch(spark, SF, steps=3)
         raw3 = plan_str(df3, "simple")
@@ -1976,9 +1974,8 @@ def test_sgns_metrics_plan(spark):
     from big_data_project_spark.plans.contracts import (
         num_shuffles_steady, plan_str, prune_cached_subtrees,
     )
-    from tests.conftest import checkpoint_rdd_guard
 
-    with checkpoint_rdd_guard(spark):
+    with scope(spark):
         df = sgns_epoch_metrics(spark, SF)
         raw = plan_str(df, "simple")
         assert len(raw) < 60_000, "x94 plan string regrew — lineage leak"
@@ -2011,9 +2008,8 @@ def test_sgns_end2end_report_plan_reads_sinks_only(spark):
     from big_data_project_spark.plans.contracts import (
         num_shuffles_steady, plan_str, prune_cached_subtrees,
     )
-    from tests.conftest import checkpoint_rdd_guard
 
-    with checkpoint_rdd_guard(spark):
+    with scope(spark):
         df = sgns_training_end2end(spark, SF)
         raw = plan_str(df, "simple")
         assert len(raw) < 20_000, "report plan dragged the training lineage"
@@ -2043,9 +2039,8 @@ def test_sgns_pred_snapshots_plan_scan_only(spark):
     from big_data_project_spark.plans.contracts import (
         num_shuffles_steady, plan_str, prune_cached_subtrees,
     )
-    from tests.conftest import checkpoint_rdd_guard
 
-    with checkpoint_rdd_guard(spark):
+    with scope(spark):
         df = sgns_prediction_snapshots(spark, SF)
         raw = plan_str(df, "simple")
         assert len(raw) < 12_000, "read-back plan dragged the training lineage"
@@ -2073,9 +2068,8 @@ def test_sgns_permuted_batches_plan(spark):
     from big_data_project_spark.plans.contracts import (
         num_shuffles_steady, plan_str, prune_cached_subtrees,
     )
-    from tests.conftest import checkpoint_rdd_guard
 
-    with checkpoint_rdd_guard(spark):
+    with scope(spark):
         df = sgns_permuted_batches(spark, SF)
         raw = plan_str(df, "simple")
         assert len(raw) < 40_000, "x96 plan string regrew — lineage leak"
@@ -2105,9 +2099,8 @@ def test_sgns_adam_epoch_plan_constant_in_steps(spark):
     from big_data_project_spark.plans.contracts import (
         num_shuffles_steady, plan_str, prune_cached_subtrees,
     )
-    from tests.conftest import checkpoint_rdd_guard
 
-    with checkpoint_rdd_guard(spark):
+    with scope(spark):
         len1 = len(plan_str(sgns_adam_epoch(spark, SF, steps=1), "simple"))
         df3 = sgns_adam_epoch(spark, SF, steps=3)
         raw3 = plan_str(df3, "simple")
@@ -2166,9 +2159,8 @@ def test_sgns_train_and_evaluate_report_plan(spark):
     from big_data_project_spark.plans.contracts import (
         num_shuffles_steady, plan_str, prune_cached_subtrees,
     )
-    from tests.conftest import checkpoint_rdd_guard
 
-    with checkpoint_rdd_guard(spark):
+    with scope(spark):
         df = sgns_train_and_evaluate(spark, SF)
         raw = plan_str(df, "simple")
         assert len(raw) < 30_000, "report plan dragged the training lineage"
@@ -2199,9 +2191,8 @@ def test_main_ingest_to_training_plans(spark):
     from big_data_project_spark.plans.contracts import (
         num_shuffles_steady, plan_str, prune_cached_subtrees,
     )
-    from tests.conftest import checkpoint_rdd_guard
 
-    with checkpoint_rdd_guard(spark):
+    with scope(spark):
         pairs, resolved = _patch_batch_frames(spark)
         ptext = prune_cached_subtrees(plan_str(pairs, "simple"))
         rtext = prune_cached_subtrees(plan_str(resolved, "simple"))
@@ -2214,7 +2205,7 @@ def test_main_ingest_to_training_plans(spark):
         # the negative resolution broadcasts the interval table
         assert len(re.findall(r"\bBroadcastNestedLoopJoin\b", rtext)) == 1
 
-    with checkpoint_rdd_guard(spark):
+    with scope(spark):
         df = main_ingest_to_training(spark, SF)
         raw = plan_str(df, "simple")
         assert len(raw) < 30_000, "report plan dragged the training lineage"

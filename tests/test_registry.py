@@ -1,20 +1,20 @@
-"""Unit tests for the verification-window ordering in registry._ordered.
+"""Unit tests for the verification-window ordering in registry._ordered,
+and for what a registered entry point releases.
 
 The driver checks only the first ~50 entries of all_queries() per round,
-so this ordering IS the verification budget — a silent regression here
-wastes a whole round of driver bandwidth (r02 lost 8 slots to a stale
-pinned-front list).  These tests pin the rules:
+so this ordering IS the verification budget.  These tests pin the rules:
 
   1. flagship first;
-  2. _FRONT names pinned ONLY while they lack a green driver row;
-  3. _REVERIFY names pinned even when green (stale-green re-check);
-  4. never-green oracle-backed queries before rows-only-never-seen;
-  5. everything green goes to the back.
+  2. never-green oracle-backed queries before rows-only-never-seen;
+  3. everything green goes to the back.
 """
 
 from __future__ import annotations
 
+import pytest
+
 from big_data_project_spark import registry
+from big_data_project_spark.session import release, snapshot_rdd_ids
 
 registry.load()
 ALL = list(registry.QUERIES)
@@ -29,9 +29,6 @@ def order_with(monkeypatch, green=frozenset(), seen=frozenset(), last_round=None
     return registry._ordered(ALL)
 
 
-REVERIFY_NAMES = [n for n, _ in registry._REVERIFY]
-
-
 def test_flagship_always_first(monkeypatch):
     assert order_with(monkeypatch)[0] == "flagship_pricing_summary"
     assert order_with(monkeypatch, green={"flagship_pricing_summary"})[0] == (
@@ -39,59 +36,18 @@ def test_flagship_always_first(monkeypatch):
     )
 
 
-def test_front_pinned_while_unverified(monkeypatch):
-    names = order_with(monkeypatch)
-    head = names[1 : 1 + len(registry._FRONT) + len(registry._REVERIFY)]
-    for n in registry._FRONT:
-        assert n in head, f"{n} should be pinned while it has no green row"
-
-
-def test_front_demotes_once_green(monkeypatch):
-    green = set(registry._FRONT)
-    names = order_with(monkeypatch, green=green)
-    window = names[:50]
-    for n in registry._FRONT:
-        assert n not in window, f"{n} is green — it must not burn a window slot"
-
-
-def test_reverify_pinned_while_row_is_stale(monkeypatch):
-    # green row from r01 only (<= stale_through_round) -> still pinned
-    names = order_with(
-        monkeypatch, green=set(REVERIFY_NAMES),
-        last_round={n: 1 for n in REVERIFY_NAMES},
-    )
-    head = names[: 1 + len(registry._FRONT) + len(registry._REVERIFY)]
-    for n in REVERIFY_NAMES:
-        assert n in head, f"{n} has a STALE green row — it must be re-checked"
-
-
-def test_reverify_dissolves_after_fresh_row(monkeypatch):
-    # any row in a round AFTER each pin's own stale_through_round ->
-    # pin dissolves (thresholds differ per entry, so simulate through+1)
-    names = order_with(
-        monkeypatch, green=set(REVERIFY_NAMES),
-        last_round={n: through + 1 for n, through in registry._REVERIFY},
-    )
-    window = names[:50]
-    for n in REVERIFY_NAMES:
-        assert n not in window, f"{n} was re-checked past its threshold — pin must dissolve"
-
-
 def test_unverified_oracles_fill_window_before_green(monkeypatch):
     some_green = {n for i, n in enumerate(sorted(registry.ORACLES)) if i % 2 == 0}
     names = order_with(monkeypatch, green=some_green)
     window = set(names[:50])
-    # no green query (outside flagship/_REVERIFY) may outrank an
-    # unverified oracle-backed one
+    # no green query (outside the flagship) may outrank an unverified
+    # oracle-backed one
     unverified = [
         n for n in ALL
         if n in registry.ORACLES and n not in some_green
         and n != "flagship_pricing_summary"
     ]
-    n_pinned = 1 + len([f for f in registry._FRONT if f not in some_green]) + len(
-        [n for n in REVERIFY_NAMES]
-    )
-    expect_in_window = min(len(unverified), 50 - n_pinned)
+    expect_in_window = min(len(unverified), 50 - 1)
     got = sum(1 for n in unverified if n in window)
     assert got >= expect_in_window, (
         f"only {got} of {expect_in_window} expected unverified oracle-backed "
@@ -107,7 +63,7 @@ def test_rows_only_never_seen_before_green(monkeypatch):
     first_green_pos = min(
         names.index(n)
         for n in green
-        if n != "flagship_pricing_summary" and n not in REVERIFY_NAMES
+        if n != "flagship_pricing_summary"
     )
     for n in rows_only:
         assert names.index(n) < first_green_pos, (
@@ -145,91 +101,41 @@ def test_green_follows_latest_row(tmp_path):
 def test_demoted_query_reenters_window(monkeypatch, tmp_path):
     # an oracle-backed query red in its latest row ranks with the unverified
     name = next(n for n in ALL if n in registry.ORACLES
-                and n != "flagship_pricing_summary" and n not in REVERIFY_NAMES
-                and n not in registry._FRONT)
+                and n != "flagship_pricing_summary")
     others = [n for n in ALL if n in registry.ORACLES and n != name]
     _write_rows(tmp_path, 1, {name: GOOD})
     _write_rows(tmp_path, 2, {n: GOOD for n in others} | {name: BAD})
     real = registry._driver_verified
     monkeypatch.setattr(registry, "_driver_verified", lambda: real(tmp_path))
     names = registry._ordered(ALL)
-    assert names.index(name) <= len(registry._FRONT) + len(REVERIFY_NAMES) + 1, (
+    assert names.index(name) == 1, (
         f"{name} regressed in its latest driver row — it must re-enter the "
         "front of the verification window"
     )
 
 
-def test_deferred_queries_front_pinned_until_green(monkeypatch):
-    # r05 policy, two deferral kinds:
-    #  - the r04-deferred five are ALSO front-pinned (VERDICT r04 #2): with
-    #    nothing green they rank immediately after the flagship, ahead of
-    #    every round-5 registration;
-    #  - late-r05 deferrals (NOT in _FRONT) must rank BEHIND every
-    #    never-seen rows-only query — they wait for the next round's window
-    #    instead of evicting this round's evidence closure.
-    names = order_with(monkeypatch)  # nothing green, nothing seen
-    front_deferred = [n for n in registry._DEFER if n in registry._FRONT]
-    late_deferred = [n for n in registry._DEFER if n not in registry._FRONT]
-    for n in front_deferred:
-        assert names.index(n) <= len(registry._FRONT), (
-            f"front-pinned deferred {n} must lead the r05 window"
-        )
-    rows_only = [n for n in registry.QUERIES if n not in registry.ORACLES]
-    last_rows_only = max(names.index(n) for n in rows_only)
-    for n in late_deferred:
-        assert names.index(n) > last_rows_only, (
-            f"late deferred {n} must rank behind every never-seen rows-only query"
-        )
-    # ...and once the driver records a green row, every deferral dissolves:
-    # green goes to the back like any verified query
-    names_seen = order_with(monkeypatch, green=set(registry._DEFER))
-    head = {n for n in names_seen[:50]}
-    for n in registry._DEFER:
-        assert n not in head, f"green deferred {n} must demote like any green"
-
-
-def test_rows_only_priority_order(monkeypatch):
-    names = order_with(monkeypatch)  # nothing green, nothing seen
-    positions = [names.index(n) for n in registry._ROWS_PRIORITY
-                 if n in registry.QUERIES]
-    assert positions == sorted(positions), (
-        "_ROWS_PRIORITY order must be preserved within the rows-only bucket"
-    )
-    other_rows_only = [n for n in ALL if n not in registry.ORACLES
-                       and n not in registry._ROWS_PRIORITY]
-    first_other = min(names.index(n) for n in other_rows_only)
-    assert max(positions) < first_other, (
-        "prioritized rows-only queries must precede the rest of the bucket"
-    )
-
-
 def test_entry_point_sweeps_only_its_own_checkpoint_blocks(spark):
     """The registered entry point releases leftover cache layers as a
-    DELTA (ADVICE r16 + r17): persisted DataFrames via clearCache (safe
-    for callers — lineage recomputes), and localCheckpoint RDD blocks —
-    which clearCache does NOT touch and whose unpersist is irrecoverable
-    — only when a PRIOR entry point created them.  A checkpoint a caller
+    DELTA: persisted DataFrames via clearCache (safe for callers —
+    lineage recomputes), and localCheckpoint RDD blocks — which
+    clearCache does NOT touch and whose unpersist is irrecoverable —
+    only when a PRIOR entry point created them.  A checkpoint a caller
     made outside any entry point must survive the sweep and stay
     collectible."""
-    from big_data_project_spark import registry
     from tests.conftest import SF_DIR
 
     registry.load()
-    jsc = spark.sparkContext._jsc
-    spark.catalog.clearCache()
-    leftovers = jsc.getPersistentRDDs()
-    for rid in list(leftovers.keySet()):
-        leftovers.get(rid).unpersist()
-    registry._SWEEP_PENDING.clear()
+    release(spark, set())
+    registry._PENDING.clear()
 
     # caller-owned blocks, created OUTSIDE any entry point: protected
     caller_ckpt = spark.range(8).localCheckpoint(eager=True)
     assert caller_ckpt.count() == 8
-    caller_ids = registry._persistent_rdd_ids(spark)
+    caller_ids = snapshot_rdd_ids(spark)
     assert caller_ids
 
     # an entry point that checkpoints internally: its block ids land in
-    # _SWEEP_PENDING at exit and the NEXT entry point releases them
+    # _PENDING at exit and the NEXT entry point releases them
     def leaky(spark_, sf_dir_):
         leaked = spark_.range(5).localCheckpoint(eager=True)
         assert leaked.count() == 5
@@ -238,13 +144,13 @@ def test_entry_point_sweeps_only_its_own_checkpoint_blocks(spark):
     registry.query("test_sweep_tmp_leaky")(leaky)
     try:
         registry.QUERIES["test_sweep_tmp_leaky"](spark, SF_DIR).collect()
-        pending = set(registry._SWEEP_PENDING)
+        pending = set(registry._PENDING)
         assert pending and pending.isdisjoint(caller_ids)
 
         # p1 neither persists nor checkpoints; after its entry point runs,
         # the prior entry point's blocks are gone — the caller's remain
         registry.QUERIES["p1_project_alias"](spark, SF_DIR).collect()
-        alive = registry._persistent_rdd_ids(spark)
+        alive = snapshot_rdd_ids(spark)
         assert alive.isdisjoint(pending)
         assert caller_ids <= alive
         # and the caller's checkpointed frame is still collectible
@@ -252,4 +158,25 @@ def test_entry_point_sweeps_only_its_own_checkpoint_blocks(spark):
     finally:
         registry.QUERIES.pop("test_sweep_tmp_leaky", None)
         caller_ckpt.unpersist()
-        registry._SWEEP_PENDING.clear()
+        registry._PENDING.clear()
+
+
+@pytest.mark.parametrize("query_name, view", [
+    ("x51_pagerank", "x51_deg"),
+    ("x67_personalized_pagerank", "x67_tp"),
+])
+def test_query_views_leave_caller_views_alone(spark, query_name, view):
+    """A query's temp views get names of their own, so a caller's view
+    that happens to share a query's prefix keeps its rows through the
+    query and through the next entry point's release."""
+    from tests.conftest import SF_DIR
+
+    registry.load()
+    spark.sql(f"CREATE OR REPLACE TEMP VIEW {view} AS SELECT 7 AS mine")
+    try:
+        assert registry.QUERIES[query_name](spark, SF_DIR).collect()
+        assert [tuple(r) for r in spark.table(view).collect()] == [(7,)]
+        registry.QUERIES["p1_project_alias"](spark, SF_DIR)
+        assert [tuple(r) for r in spark.table(view).collect()] == [(7,)]
+    finally:
+        spark.catalog.dropTempView(view)

@@ -14,6 +14,7 @@ from contextlib import contextmanager
 from pyspark.sql import functions as F
 
 from big_data_project_spark.io import load_table
+from big_data_project_spark.session import release, snapshot_rdd_ids
 
 SF = "/root/testdata/sf0.01"
 
@@ -176,49 +177,46 @@ def test_bench_rows_all_resolve_to_registered_queries():
 
 
 def test_bench_frees_checkpoint_rdds_between_rows(spark, sf_dir):
-    """bench.py's delta-based cleanup (ADVICE r07): clearCache does not
-    release localCheckpoint RDD blocks, so the bench frees each row's
-    leftovers itself.  Pin the mechanism: after an x61 run (which
-    checkpoints the d²-cell gsym frame) free_new_rdds must release every
-    RDD the row pinned — and leave anything persisted beforehand alone.
+    """The delta release between bench rows (`session.release`, which
+    bench.py imports as ``free_new_rdds``): clearCache does not release
+    localCheckpoint RDD blocks, so the release frees them itself.  Pin
+    the mechanism: after an x61 run (which checkpoints the d²-cell gsym
+    frame) the release must free every RDD the row pinned — and leave
+    anything persisted beforehand alone.
 
-    Uses the RAW x61 function, not the registered entry point: since
-    r17 the entry point itself sweeps ALL leftover RDD blocks (the
-    ADVICE-r16 window-leak fix, pinned in test_registry), which would
-    release `pre` before free_new_rdds's leave-older-RDDs-alone
-    property could be observed — the bench delta mechanism under test
-    here is the BETWEEN-rows safety net, independent of that sweep."""
-    import bench
+    Uses the RAW x61 function, not the registered entry point: the entry
+    point itself releases the previous entry point's RDD blocks (pinned
+    in test_registry), which would release `pre` before the
+    leave-older-RDDs-alone property could be observed."""
     from big_data_project_spark.pipeline.similarity import x61_pca_project
 
     # The pre-existing entry must be localCheckpoint-backed, NOT .cache():
-    # the bench's between-run reset calls clearCache(), which drops
-    # DataFrame caches — a cached `pre` would be gone before
-    # free_new_rdds ever ran and the leave-older-RDDs-alone property
-    # would be vacuously true.  clearCache does not release checkpoint
-    # RDD blocks, so this survives to make the assertion real.
-    base = bench.snapshot_rdd_ids(spark)
+    # the release calls clearCache(), which drops DataFrame caches — a
+    # cached `pre` would be gone before the RDD delta ever ran and the
+    # leave-older-RDDs-alone property would be vacuously true.
+    # clearCache does not release checkpoint RDD blocks, so this survives
+    # to make the assertion real.
+    base = snapshot_rdd_ids(spark)
     pre = spark.range(10).localCheckpoint(eager=True)
-    pre_ids = bench.snapshot_rdd_ids(spark) - base
+    pre_ids = snapshot_rdd_ids(spark) - base
     assert pre_ids, "pre-existing localCheckpoint should be persisted"
     try:
-        before = bench.snapshot_rdd_ids(spark)
+        before = snapshot_rdd_ids(spark)
         x61_pca_project(spark, sf_dir).count()
         spark.catalog.clearCache()  # the bench's between-run reset...
-        leaked = bench.snapshot_rdd_ids(spark) - before
+        leaked = snapshot_rdd_ids(spark) - before
         assert leaked, "x61 should leave localCheckpoint RDDs behind"
-        freed = bench.free_new_rdds(spark, before)
+        freed = release(spark, before)
         assert freed == len(leaked)
-        after = bench.snapshot_rdd_ids(spark)
+        after = snapshot_rdd_ids(spark)
         assert after <= before
         # the pre-existing checkpoint RDD is still persisted, not freed
-        assert pre_ids <= after, "free_new_rdds released a pre-existing RDD"
+        assert pre_ids <= after, "release freed a pre-existing RDD"
         assert pre.count() == 10
     finally:
-        # clearCache does NOT release checkpoint RDDs — free everything
-        # this test created (pre included) so the session stays clean
-        bench.free_new_rdds(spark, base)
-        spark.catalog.clearCache()
+        # free everything this test created (pre included) so the
+        # session stays clean
+        release(spark, base)
 
 
 def test_bpe_train_releases_previous_generations(spark, sf_dir):
@@ -232,11 +230,11 @@ def test_bpe_train_releases_previous_generations(spark, sf_dir):
     spark.catalog.clearCache()
     # DELTA, not absolute: clearCache drops DataFrame caches but not
     # localCheckpoint RDDs other tests in the session may have left
-    before = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+    before = len(snapshot_rdd_ids(spark))
     try:
         rows = all_queries()["x58_bpe_train"](spark, sf_dir).collect()
         assert len(rows) == 3
-        after = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+        after = len(snapshot_rdd_ids(spark))
         assert after - before <= 4, f"cached generations leaked: {after - before}"
     finally:
         spark.catalog.clearCache()
