@@ -25,9 +25,8 @@ the anti-join, …) while staying expressible on the available schema:
 Q2/Q11 are partsupp-native; the fixture ships no ``partsupp``, so both run
 on a DETERMINISTIC synthetic partsupp derived in-query from part×supplier
 (``_PARTSUPP_CTE`` below — exact-integer cents, SF-scaling via the live
-supplier count, identical text on both engines). Prepped un-registered at
-the bottom of this module; Q1's shape is ``flagship_pricing_summary``,
-Q17/Q20/Q21 live in sql_surface.py.
+supplier count, identical text on both engines). Q1's shape is
+``flagship_pricing_summary``, Q17/Q20/Q21 live in sql_surface.py.
 
 Identical ANSI text runs on Spark and the DuckDB oracle (parity rules of
 registry.py: round+1e-9 on float aggs, BIGINT casts on counts, total order
@@ -513,8 +512,7 @@ _register(
 
 # --- Q2/Q11: the partsupp pair, on a deterministic synthetic partsupp -------
 #
-# The fixtures ship no partsupp (the one VERDICT-acknowledged relational
-# non-gap).  Both classic shapes are closed by DERIVING partsupp inside the
+# The fixtures ship no partsupp (the one relational table they lack).  Both classic shapes are closed by DERIVING partsupp inside the
 # query from the tables that do ship, with the classic generator's structure:
 # each part gets exactly 4 suppliers, spread cyclically over the live
 # supplier count S (so the table SF-scales with the fixtures: 4×|part| rows
@@ -542,7 +540,7 @@ partsupp AS (
   ) AS keys
 )"""
 
-Q2_TEXT = f"""WITH{_PARTSUPP_CTE}
+_Q2 = f"""WITH{_PARTSUPP_CTE}
 SELECT s.s_acctbal,
        s.s_name,
        n.n_name,
@@ -569,8 +567,9 @@ ORDER BY s_acctbal DESC, n_name, s_name, p_partkey
 LIMIT 100
 """
 
-
-def sql_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register(
+    "sql_q2_min_cost_supplier",
+    _Q2,
     """TPC-H Q2: minimum-cost supplier per qualifying part (p_brand stands
     in for the fixture-absent p_mfgr; size-band + suffix-LIKE keep the
     selective part filter; the suffix wildcard is deliberately
@@ -589,18 +588,11 @@ def sql_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows whose only wide exchange is the ps_partkey agg+join of the
     decorrelation; dims broadcast.  At 100 TB the same text runs with
     partsupp as a real table and the plan is unchanged minus the
-    generator.
-
-    Prepped r18, un-registered (the r18 window is spent on the sanctioned
-    capstones + rotation; an unsanctioned slot would displace a rotation
-    row).  Registration is one line, queued behind the r19 main()
-    registration: ``query("sql_q2_min_cost_supplier",
-    oracle=Q2_TEXT)(sql_q2_min_cost_supplier)``.
-    """
-    return _sql(spark, sf_dir, Q2_TEXT)
+    generator.""",
+)
 
 
-Q11_TEXT = f"""WITH{_PARTSUPP_CTE},
+_Q11 = f"""WITH{_PARTSUPP_CTE},
 nation_ps AS (
   SELECT ps.ps_partkey,
          ps.ps_supplycost_cents * ps.ps_availqty AS v_cents
@@ -625,8 +617,9 @@ WHERE gr.part_cents * tot.g * 10 > 13 * tot.t
 ORDER BY value DESC, ps_partkey
 """
 
-
-def sql_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
+_register(
+    "sql_q11_important_stock",
+    _Q11,
     """TPC-H Q11: parts whose one-nation stock value exceeds a global
     threshold (NATION_18 has suppliers at every fixture tier).  The
     classic fixed 0.0001 fraction is meaningless against SF-scaling
@@ -640,10 +633,5 @@ def sql_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     Q11 double reference), and AQE collapses the duplicated ps_partkey
     agg exchange via ReusedExchange so the fact-side aggregation
     executes once, with (t, g) broadcast back as one row — both pinned
-    in test_plans.py.
-
-    Prepped r18, un-registered; registration is one line, queued with
-    Q2: ``query("sql_q11_important_stock",
-    oracle=Q11_TEXT)(sql_q11_important_stock)``.
-    """
-    return _sql(spark, sf_dir, Q11_TEXT)
+    in test_plans.py.""",
+)

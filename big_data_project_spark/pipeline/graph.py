@@ -541,12 +541,6 @@ def triangles_of_edges(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
     return tri, deg
 
 
-def triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Triangle frame only — see `_tri_frames` for the algorithm, join
-    strategy, and cache contract."""
-    return _tri_frames(spark, sf_dir)[0]
-
-
 @query(
     "x64_triangle_count",
     oracle=_TRI_ORACLE_CTES + """
@@ -2741,8 +2735,8 @@ def _sgns_dots_cte(i: int, ex_table: str = "ex") -> str:
     ``vin{i}``/``vout{i}``.  Factored out of ``_sgns_step_ctes`` so the
     x94 metrics oracle can score the POST-epoch matrices (``dots{N}``)
     without unrolling a step that never runs.  ``ex_table`` names the
-    examples CTE (default the shared full batch) so the x96 permuted-
-    batch oracle can score per-step subsets."""
+    examples CTE (default the shared full batch) so the full-fidelity
+    trainer oracle can score per-batch subsets."""
     return f""",
     dots{i} AS MATERIALIZED (
       SELECT e.center, e.ctx, e.label, e.cnt,
@@ -2759,7 +2753,7 @@ def _sgns_grads_ctes(i: int, ex_table: str = "ex") -> str:
     ``vin{i}``/``vout{i}``.  Factored out of ``_sgns_step_ctes`` so
     the x95 Adam oracle can consume the same gradients under a
     different update rule; ``ex_table`` selects the step's examples
-    (the x96 permuted-batch oracle feeds per-batch subsets)."""
+    (the full-fidelity trainer oracle feeds per-batch subsets)."""
     return _sgns_dots_cte(i, ex_table) + f""",
     gd{i} AS MATERIALIZED (
       SELECT center, ctx, label, cnt,
@@ -2779,14 +2773,12 @@ def _sgns_grads_ctes(i: int, ex_table: str = "ex") -> str:
       GROUP BY d.ctx, vi.k)"""
 
 
-def _sgns_step_ctes(i: int, ex_table: str = "ex") -> str:
+def _sgns_step_ctes(i: int) -> str:
     """One SGD step as CTEs — the oracle mirror of ``_sgns_grads`` +
     ``_sgns_step``: the gradient block plus ``vin{i+1}``/``vout{i+1}``
     with the rounded update.  Defined ONCE and unrolled per step by
-    both the x92 and x93 oracles, mirroring the Spark-side factoring;
-    ``ex_table`` selects the step's examples (default the shared full
-    batch; x96 feeds per-batch subsets)."""
-    return _sgns_grads_ctes(i, ex_table) + f""",
+    the x92, x93 and x94 oracles, mirroring the Spark-side factoring."""
+    return _sgns_grads_ctes(i) + f""",
     vin{i + 1} AS MATERIALIZED (
       SELECT b.node, b.k,
              round(b.v - {_SG_LR} * coalesce(g.grad, 0.0) + 1e-12, 10) AS v
@@ -2912,7 +2904,7 @@ query("x93_sgns_train_epoch", oracle=_sgns_epoch_oracle())(sgns_train_epoch)
 
 
 # --------------------------------------------------------------------------
-# x94 (prepped r16, un-registered): per-step epoch metrics — loss + accuracy
+# x94: per-step epoch metrics — loss + accuracy
 # --------------------------------------------------------------------------
 
 
@@ -3267,336 +3259,23 @@ query("x95_sgns_adam_epoch", oracle=_sgns_adam_oracle())(sgns_adam_epoch)
 
 
 # --------------------------------------------------------------------------
-# pipeline_sgns_training_end2end (prepped r17, un-registered): the full
-# training driver — the reference's train_and_evaluate as ONE pipeline
+# pipeline_sgns_train_and_evaluate: the reference driver at FULL fidelity —
+# Adam over per-epoch re-permuted mini-batches, with all three sinks
 # --------------------------------------------------------------------------
 
 _TE_EPOCHS = 4  # keep=3 must SWEEP an epoch for the retention contract to bite
 _TE_KEEP = 3
-
-
-def sgns_training_end2end(
-    spark: SparkSession,
-    sf_dir: str,
-    epochs: int = _TE_EPOCHS,
-    steps_per_epoch: int = _SG_EPOCH_STEPS,
-    keep: int = _TE_KEEP,
-) -> DataFrame:
-    """The reference's FULL training driver — ``train_and_evaluate``
-    (trainer/flax_model.py:295-390) — as one composed, oracle-checked
-    pipeline over the verified-tier SGNS chain: per epoch, (1) a
-    ``steps_per_epoch``-step train loop (x93's shared ``_sgns_step``
-    algebra), (2) epoch bookkeeping — train_loss/train_accuracy as the
-    mean of the per-step pre-update metrics (``np.mean(epoch_loss)``,
-    flax_model.py:256-259) plus the post-epoch test_loss/test_accuracy
-    eval (flax_model.py:355-364) — appended long-format to a parquet
-    metrics sink, one row per ``summary_writer.scalar`` tag
-    (flax_model.py:371-375, the s7 shape), and (3) a keep-N weight
-    checkpoint (``checkpoints.save_checkpoint(..., keep=3)``,
-    flax_model.py:377, the s6 shape via ``write_checkpoint``).  The
-    returned frame is built ONLY from the sinks' read-back: per epoch,
-    the four metric scalars (append-lossless: ALL epochs survive the
-    metrics log) LEFT-joined with the surviving checkpoints' row count
-    and weight checksum (retention: epochs ``1..epochs-keep`` are
-    swept, reading back NULL).  Output: (epoch, train_loss,
-    train_accuracy, test_loss, test_accuracy, ckpt_rows, ckpt_wsum).
-
-    Composition contract (the new content over the verified pieces —
-    pinned by the pure-Python replay in tests): each kept epoch's
-    checkpoint rows equal the shared SGNS chain's state after
-    ``epoch·steps_per_epoch`` steps (epoch 1's checkpoint is exactly
-    x93's v2 matrix — and is the one the sweep deletes), and epoch 1's
-    metrics row equals x94's rows 0..2 folded to means.
-
-    The checksum is ORDER-INDEPENDENT exact arithmetic: weights are
-    10-dp rationals, so ``sum(cast(round(w·1e10) as bigint))`` is an
-    integer fold both engines agree on regardless of partial-sum order
-    (a double sum over vocab×dim values would be reduction-order ulp
-    noise).
-
-    Scale design: the train loop is x93's (constant-size plan via
-    per-step localCheckpoint; examples/gradients broadcast; one
-    partial+final agg exchange per fold); the metrics rows reuse each
-    step's persisted ``gd`` (the x94 ADVICE-r16 rule), unpersisted as
-    soon as the epoch's sink write materializes them; the sinks are
-    the real scale story — the returned plan reads PARQUET only, so
-    the analysis/report side is fully decoupled from the training
-    lineage, exactly how a 1000-executor training job ships metrics to
-    TensorBoard and checkpoints to object storage."""
-    import os
-    import shutil
-
-    from big_data_project_spark.sources.formats import _tmp, write_checkpoint
-
-    if epochs < 1 or steps_per_epoch < 1 or keep < 1:
-        raise ValueError("epochs, steps_per_epoch and keep must all be >= 1")
-
-    mroot = _tmp("te_metrics")
-    croot = _tmp("te_ckpt")
-    for root in (mroot, croot):
-        shutil.rmtree(root, ignore_errors=True)
-        os.makedirs(root, exist_ok=True)
-
-    ex, vin, vout = _sgns_inputs(spark, sf_dir)
-    step_no = 0
-    for epoch in range(1, epochs + 1):
-        gds: list[DataFrame] = []
-        train_rows: DataFrame | None = None
-        for _ in range(steps_per_epoch):
-            vin, vout, gd = _sgns_step(ex, vin, vout, return_gd=True)
-            gds.append(gd)
-            row = _sgns_metrics_row(gd, step_no)
-            train_rows = row if train_rows is None else train_rows.unionByName(row)
-            step_no += 1
-        # Exact fold (ADVICE r17): the per-step values are 6-dp, so sum
-        # them as scaled integers — Spark's avg over unioned partitions
-        # has no guaranteed reduction order, and a double fold could
-        # drift 1 ulp against the oracle's fixed textual order at larger
-        # step counts.  Integer sums are order-independent and exact.
-        scaled = lambda c: F.sum(  # noqa: E731
-            F.round(F.col(c) * F.lit(1e6)).cast("long")
-        )
-        train_agg = train_rows.agg(
-            F.round(
-                scaled("loss") / (F.count(F.lit(1)) * F.lit(1e6)) + F.lit(1e-9), 6
-            ).alias("train_loss"),
-            F.round(
-                scaled("accuracy") / (F.count(F.lit(1)) * F.lit(1e6))
-                + F.lit(1e-9), 6,
-            ).alias("train_accuracy"),
-        )
-        test_agg = _sgns_metrics_row(_sgns_dots(ex, vin, vout), step_no).select(
-            F.col("loss").alias("test_loss"),
-            F.col("accuracy").alias("test_accuracy"),
-        )
-        scalars = train_agg.crossJoin(test_agg).selectExpr(
-            "stack(4, 'train_loss', train_loss, 'train_accuracy', train_accuracy,"
-            " 'test_loss', test_loss, 'test_accuracy', test_accuracy)"
-            " AS (metric, value)"
-        ).select(F.lit(epoch).alias("epoch"), "metric", "value")
-        scalars.write.mode("append").parquet(mroot)  # action: gds consumed
-        for gd in gds:
-            gd.unpersist()
-        state = vin.select(
-            F.lit("in").alias("side"), "node", "k", F.col("v").alias("w")
-        ).unionByName(
-            vout.select(F.lit("out").alias("side"), "node", "k", F.col("v").alias("w"))
-        )
-        write_checkpoint(state, croot, epoch, keep=keep)
-
-    metrics = spark.read.parquet(mroot)
-    wide = metrics.groupBy("epoch").agg(
-        *[
-            F.max(F.when(F.col("metric") == m, F.col("value"))).alias(m)
-            for m in ("train_loss", "train_accuracy", "test_loss", "test_accuracy")
-        ]
-    )
-    ckpts = (
-        spark.read.option("basePath", croot)
-        .parquet(croot)
-        .groupBy("epoch")
-        .agg(
-            F.count(F.lit(1)).alias("ckpt_rows"),
-            F.sum(F.round(F.col("w") * F.lit(1e10)).cast("long")).alias("ckpt_wsum"),
-        )
-    )
-    return wide.join(ckpts, "epoch", "left").orderBy("epoch")
-
-
-def _sgns_end2end_oracle(
-    epochs: int = _TE_EPOCHS,
-    steps_per_epoch: int = _SG_EPOCH_STEPS,
-    keep: int = _TE_KEEP,
-) -> str:
-    """The composition's oracle: base + ``epochs·steps_per_epoch``
-    unrolled step CTEs + the post-epoch dots frames, one-row metric
-    CTEs per evaluation point (the x94 ``met_sql`` algebra), per-epoch
-    means, and the surviving checkpoints' integer checksum straight
-    from the ``vin{2e}``/``vout{2e}`` trajectory CTEs — epochs swept by
-    keep-N read back NULL via the LEFT JOIN."""
-    total = epochs * steps_per_epoch
-    sig = (
-        f"round(1.0 / (1.0 + exp(-greatest(least(dot, {_SG_CLAMP}),"
-        f" -{_SG_CLAMP}))) + 1e-9, 6)"
-    )
-    parts = [_sgns_base_ctes()]
-    parts.extend(_sgns_step_ctes(i) for i in range(total))
-    parts.append(_sgns_dots_cte(total))
-    for i in range(total + 1):
-        parts.append(f""",
-    met{i} AS MATERIALIZED (
-      SELECT round(sum(cnt * round(-(label * ln(sig)
-                                     + (1.0 - label) * ln(1.0 - sig)) + 1e-9, 6))
-                   / sum(cnt) + 1e-9, 6) AS loss,
-             round(sum(cnt * (CASE WHEN (dot > 0) = (label = 1.0)
-                              THEN 1 ELSE 0 END))
-                   / sum(cnt) + 1e-9, 6) AS accuracy
-      FROM (SELECT cnt, label, dot, {sig} AS sig FROM dots{i}) m{i})""")
-
-    def epoch_sql(e: int) -> str:
-        first = (e - 1) * steps_per_epoch
-        union = "\n        UNION ALL\n        ".join(
-            f"SELECT loss, accuracy FROM met{first + s}"
-            for s in range(steps_per_epoch)
-        )
-        return f"""SELECT CAST({e} AS INT) AS epoch,
-           round(sum(CAST(round(loss * 1e6) AS BIGINT))
-                 / (count(*) * 1e6) + 1e-9, 6) AS train_loss,
-           round(sum(CAST(round(accuracy * 1e6) AS BIGINT))
-                 / (count(*) * 1e6) + 1e-9, 6) AS train_accuracy,
-           (SELECT loss FROM met{e * steps_per_epoch}) AS test_loss,
-           (SELECT accuracy FROM met{e * steps_per_epoch}) AS test_accuracy
-    FROM ({union})"""
-
-    kept = range(max(1, epochs - keep + 1), epochs + 1)
-
-    def ckpt_sql(e: int) -> str:
-        n = e * steps_per_epoch
-        return f"""SELECT CAST({e} AS INT) AS epoch,
-           CAST(count(*) AS BIGINT) AS ckpt_rows,
-           CAST(sum(CAST(round(w * 1e10) AS BIGINT)) AS BIGINT) AS ckpt_wsum
-    FROM (SELECT v AS w FROM vin{n} UNION ALL SELECT v AS w FROM vout{n})"""
-
-    epochs_body = "\n    UNION ALL\n    ".join(epoch_sql(e) for e in range(1, epochs + 1))
-    ckpt_body = "\n    UNION ALL\n    ".join(ckpt_sql(e) for e in kept)
-    return "".join(parts) + f"""
-    SELECT m.epoch, m.train_loss, m.train_accuracy, m.test_loss, m.test_accuracy,
-           c.ckpt_rows, c.ckpt_wsum
-    FROM ({epochs_body}) m
-    LEFT JOIN ({ckpt_body}) c ON c.epoch = m.epoch
-"""
-
-
-# Registration queued for a free r18 window slot (VERDICT r16 #4 — prep
-# only this round): query("pipeline_sgns_training_end2end",
-# oracle=_sgns_end2end_oracle())(sgns_training_end2end)
-
-
-# --------------------------------------------------------------------------
-# pipeline_sgns_prediction_snapshots (prepped r17, un-registered): the
-# reference's save_predictions sink — modulo-gated per-epoch snapshots
-# --------------------------------------------------------------------------
-
 _PRED_EVERY = 2  # the reference gates on epoch % 10 == 0 (flax_model.py:380)
 
 
-def sgns_prediction_snapshots(
-    spark: SparkSession,
-    sf_dir: str,
-    epochs: int = _TE_EPOCHS,
-    steps_per_epoch: int = _SG_EPOCH_STEPS,
-    every: int = _PRED_EVERY,
-) -> DataFrame:
-    """The reference's prediction sink — ``save_predictions``
-    (trainer/flax_model.py:279-285), called from the training loop
-    only on epochs passing the ``epoch % 10 == 0`` gate
-    (flax_model.py:380-384), persisting (inputs, labels, preds) per
-    epoch directory — at the verified tier: run the shared SGNS
-    schedule, and at each gated epoch snapshot the model's
-    per-example predictions (the 6-dp clamped sigmoid over the
-    epoch-state dots, ``_sgns_sig_col`` — THE recipe's single
-    transcendental) with their examples to an epoch-partitioned
-    parquet dir (the reference's ``epoch_{e}/`` layout).  The
-    returned frame is the sink's READ-BACK only: (epoch, center, ctx,
-    label, cnt, dot, pred) — ungated epochs must be absent, gated
-    ones lossless.
-
-    Prepped r17, un-registered: queued for a free r18 window slot
-    behind ``pipeline_sgns_training_end2end`` — registration is one
-    line, ``query("pipeline_sgns_prediction_snapshots",
-    oracle=_sgns_pred_oracle())(sgns_prediction_snapshots)``.
-
-    Scale design: the training loop is x93's (constant-size plan via
-    per-step localCheckpoint, per-step gd unpersisted); each snapshot
-    is one broadcast-ex dots chain + a columnar write of
-    batch-bounded rows; the returned plan scans PARQUET only (one
-    FileScan + the output sort — no join, no Python), so the
-    review/analysis side never drags the training lineage — at a real
-    vocabulary the prediction scan is the classic score-and-dump
-    side output, sharded by the same (node, k) keys as the folds."""
-    import os
-    import shutil
-
-    from big_data_project_spark.sources.formats import _tmp
-
-    if epochs < 1 or steps_per_epoch < 1 or every < 1:
-        raise ValueError("epochs, steps_per_epoch and every must all be >= 1")
-    if every > epochs:
-        # no epoch would pass the modulo gate: the sink would stay empty
-        # and the read-back would fail schema inference (ADVICE r17)
-        raise ValueError("every must be <= epochs (gate must admit an epoch)")
-
-    proot = _tmp("te_pred_snapshots")
-    shutil.rmtree(proot, ignore_errors=True)
-    os.makedirs(proot, exist_ok=True)
-
-    ex, vin, vout = _sgns_inputs(spark, sf_dir)
-    for epoch in range(1, epochs + 1):
-        for _ in range(steps_per_epoch):
-            vin, vout = _sgns_step(ex, vin, vout)
-        if epoch % every == 0:
-            preds = _sgns_dots(ex, vin, vout).select(
-                "center", "ctx", "label", "cnt", "dot",
-                _sgns_sig_col().alias("pred"),
-            )
-            preds.write.mode("overwrite").parquet(
-                os.path.join(proot, f"epoch={epoch}")
-            )
-    return (
-        spark.read.option("basePath", proot)
-        .parquet(proot)
-        .select("epoch", "center", "ctx", "label", "cnt", "dot", "pred")
-        .orderBy("epoch", "center", "ctx", "label")
-    )
-
-
-def _sgns_pred_oracle(
-    epochs: int = _TE_EPOCHS,
-    steps_per_epoch: int = _SG_EPOCH_STEPS,
-    every: int = _PRED_EVERY,
-) -> str:
-    """The snapshot sink's oracle: base + the unrolled step CTEs, then
-    for each GATED epoch one select over the epoch-state dots frame
-    with the shared sigmoid expression — ungated epochs simply never
-    appear, which is the modulo-gate contract."""
-    if every > epochs:
-        # the UNION body below would be empty — CTEs with no final
-        # SELECT is a DuckDB parse error (ADVICE r17); mirror the
-        # runner's guard so both sides fail loudly and identically
-        raise ValueError("every must be <= epochs (gate must admit an epoch)")
-    total = epochs * steps_per_epoch
-    gated = [e for e in range(1, epochs + 1) if e % every == 0]
-    sig = (
-        f"round(1.0 / (1.0 + exp(-greatest(least(dot, {_SG_CLAMP}),"
-        f" -{_SG_CLAMP}))) + 1e-9, 6)"
-    )
-    parts = [_sgns_base_ctes()]
-    parts.extend(_sgns_step_ctes(i) for i in range(total))
-    if gated and gated[-1] * steps_per_epoch == total:
-        parts.append(_sgns_dots_cte(total))
-    body = "\n    UNION ALL\n    ".join(
-        f"""SELECT CAST({e} AS INT) AS epoch, center, ctx, label, cnt, dot,
-           {sig} AS pred
-    FROM dots{e * steps_per_epoch}"""
-        for e in gated
-    )
-    return "".join(parts) + "\n    " + body + "\n"
-
-
-# --------------------------------------------------------------------------
-# x96 (prepped r17, un-registered): permuted mini-batch epoch — the
-# reference's per-epoch permutation + batch reshape + skip-incomplete
-# --------------------------------------------------------------------------
-
-
-def _sgns_batched(ex: DataFrame, batches: int, epoch: int | None = None) -> DataFrame:
+def _sgns_batched(ex: DataFrame, batches: int, epoch: int) -> DataFrame:
     """The deterministic permutation + reshape + skip-incomplete over
     the examples frame (trainer/flax_model.py:234-236): md5-rank the
-    distinct weighted examples (prefixed with the epoch number when
-    given — the reference re-splits its rng per epoch, :350), keep the
-    first ``batches·bs`` ranks, bucket ``floor((rn-1)/bs)``.  Shared
-    by x96 (one epoch, no seed) and the full-fidelity trainer (one
-    re-permutation per epoch).  The returned frame localCheckpoints:
+    distinct weighted examples prefixed with the epoch number (the
+    reference re-splits its rng per epoch, :350), keep the first
+    ``batches·bs`` ranks, bucket ``floor((rn-1)/bs)``.  The
+    full-fidelity trainer calls it once per epoch (one re-permutation
+    per epoch).  The returned frame localCheckpoints:
     every step of the epoch filters it.  The rank window runs single-
     partition over the batch-BOUNDED frame (≤ _SG_BATCH·(1+_SG_NEG_K)
     rows); at a real corpus the rank step is swapped for direct
@@ -3607,10 +3286,10 @@ def _sgns_batched(ex: DataFrame, batches: int, epoch: int | None = None) -> Data
         raise ValueError(
             f"fewer examples ({n_examples}) than batches ({batches})"
         )
-    key_parts = ([F.lit(epoch)] if epoch is not None else []) + [
-        F.col("center"), F.col("ctx"), F.col("label").cast("int"),
-    ]
-    key = F.md5(F.concat_ws(":", *key_parts))
+    key = F.md5(F.concat_ws(
+        ":", F.lit(epoch), F.col("center"), F.col("ctx"),
+        F.col("label").cast("int"),
+    ))
     return (
         ex.withColumn("rn", F.row_number().over(Window.orderBy(key)))
         .filter(F.col("rn") <= batches * bs)
@@ -3619,117 +3298,6 @@ def _sgns_batched(ex: DataFrame, batches: int, epoch: int | None = None) -> Data
         )
         .localCheckpoint(eager=True)
     )
-
-
-def sgns_permuted_batches(
-    spark: SparkSession, sf_dir: str, batches: int = _SG_EPOCH_STEPS
-) -> DataFrame:
-    """The last ``train_epoch`` semantic the verified tier had not yet
-    mirrored: the reference permutes the dataset each epoch, reshapes
-    it into equal mini-batches, DROPS the incomplete remainder, and
-    takes one optimizer step per DISTINCT batch
-    (``jax.random.permutation`` → ``perms.reshape((steps_per_epoch,
-    batch_size))`` with ``perms[: steps_per_epoch * batch_size]``,
-    trainer/flax_model.py:234-236) — where x93/x95 step repeatedly
-    over ONE shared batch.  Here the deterministic permutation is the
-    md5 order of each distinct weighted example, the reshape is
-    row_number → ``batch = floor((rn-1)/bs)`` with ``bs = N //
-    batches``, the remainder ``rn > batches·bs`` is skipped, and each
-    step's gradients fold ONLY its own batch (nodes outside a batch
-    receive no gradient and must not move — the per-batch sparsity
-    the full-batch chain never exercises).  Output: (side, node, k,
-    v0..vB) — the weight trajectory across the mini-batch steps.
-
-    Prepped r17, un-registered: queued for a free window slot behind
-    the two sink compositions — registration is one line,
-    ``query("x96_sgns_permuted_batches",
-    oracle=_sgns_permuted_oracle())(sgns_permuted_batches)``.
-
-    Scale design: identical per-step exchange structure to x93 (batch
-    broadcast into the dots/gradient chain, one partial+final agg per
-    fold, per-step localCheckpoint + per-step gd release).  The
-    row_number permutation runs over the batch-BOUNDED examples frame
-    (≤ _SG_BATCH·(1+_SG_NEG_K) rows by construction), so its single-
-    partition window is a bounded scalar pass — at a real corpus the
-    permutation is the standard distributed shuffle-assign (hash the
-    example key into a batch id), which this md5 formulation already
-    is once the rank step is swapped for direct bucketing."""
-    ex, vin, vout = _sgns_inputs(spark, sf_dir)
-    exb = _sgns_batched(ex, batches)
-    vins, vouts = [vin], [vout]
-    for b in range(batches):
-        ex_b = exb.filter(F.col("batch") == b).select(
-            "center", "ctx", "label", "cnt"
-        )
-        nvin, nvout = _sgns_step(ex_b, vins[-1], vouts[-1])
-        vins.append(nvin)
-        vouts.append(nvout)
-
-    def side_out(frames: list[DataFrame], side: str) -> DataFrame:
-        # broadcast the trajectory joins — checkpoint leaves carry no
-        # stats (the x93 lesson)
-        out = frames[0].select(
-            F.lit(side).alias("side"), "node", "k", F.col("v").alias("v0")
-        )
-        for step, frame in enumerate(frames[1:], start=1):
-            out = out.join(
-                F.broadcast(
-                    frame.select("node", "k", F.col("v").alias(f"v{step}"))
-                ),
-                ["node", "k"],
-            )
-        return out
-
-    out = side_out(vins, "in").unionByName(side_out(vouts, "out"))
-    return out.orderBy("side", "node", "k")
-
-
-def _sgns_permuted_oracle(batches: int = _SG_EPOCH_STEPS) -> str:
-    """x96's oracle: base + the md5-rank permutation/reshape CTE
-    (``exb``), one batch-subset CTE per step feeding the SHARED step
-    block via its ``ex_table`` parameter, and the x93-shaped
-    trajectory select."""
-    parts = [_sgns_base_ctes()]
-    parts.append(f""",
-    exb AS MATERIALIZED (
-      SELECT center, ctx, label, cnt,
-             CAST(floor((rn - 1) / bs) AS INT) AS batch
-      FROM (
-        SELECT center, ctx, label, cnt,
-               row_number() OVER (
-                 ORDER BY md5(concat_ws(':', center, ctx,
-                                        CAST(label AS INT)))) AS rn,
-               (SELECT count(*) // {batches} FROM ex) AS bs
-        FROM ex) ranked
-      WHERE rn <= {batches} * bs)""")
-    for i in range(batches):
-        parts.append(f""",
-    exb{i} AS MATERIALIZED (
-      SELECT center, ctx, label, cnt FROM exb WHERE batch = {i})""")
-        parts.append(_sgns_step_ctes(i, ex_table=f"exb{i}"))
-    vcols = ", ".join(f"s{i}.v AS v{i}" for i in range(batches + 1))
-
-    def side_sql(prefix: str, side: str) -> str:
-        joins = "\n    ".join(
-            f"JOIN {prefix}{i} s{i} ON s{i}.node = s0.node AND s{i}.k = s0.k"
-            for i in range(1, batches + 1)
-        )
-        return f"""SELECT '{side}' AS side, s0.node, s0.k, {vcols}
-    FROM {prefix}0 s0
-    {joins}"""
-
-    return "".join(parts) + f"""
-    {side_sql("vin", "in")}
-    UNION ALL
-    {side_sql("vout", "out")}
-"""
-
-
-# --------------------------------------------------------------------------
-# pipeline_sgns_train_and_evaluate (prepped r17, un-registered): the
-# reference driver at FULL fidelity — Adam over per-epoch re-permuted
-# mini-batches, with all three sinks
-# --------------------------------------------------------------------------
 
 
 def sgns_train_and_evaluate(
@@ -3769,13 +3337,10 @@ def sgns_train_and_evaluate(
     ``sum(round(w·1e10) + round(m·1e10) + round(s·1e10))`` over both
     state sides is exact bigint arithmetic both engines agree on.
 
-    Prepped r17, un-registered (the r17 window is spent on x94/x95 +
-    rotation): registration is one line,
-    ``query("pipeline_sgns_train_and_evaluate",
-    oracle=_sgns_tae_oracle())(sgns_train_and_evaluate)`` — queued
-    with the other r17 preps, and it SUPERSEDES them semantically
-    (end2end = this with SGD + one shared batch; snapshots/x96 are its
-    legs), so if the window can take only one new slot, take this one.
+    It subsumes the simpler training compositions: plain SGD over one
+    shared batch is this with the optimizer and permutation dropped,
+    and the prediction snapshots and permuted mini-batches are its
+    legs, so the driver is the one training-loop composition.
 
     Scale design: per step, x95's exchange structure exactly (batch
     broadcast into the dots/gradient chain, one partial+final agg per
@@ -4013,17 +3578,15 @@ def _sgns_tae_oracle(
 """
 
 
-# Registered r18 (VERDICT r17 #2 sanctioned slot; supersedes the
-# end2end/snapshot/x96 legs, which stay library-only compositions).
 query("pipeline_sgns_train_and_evaluate", oracle=_sgns_tae_oracle())(
     sgns_train_and_evaluate
 )
 
 
 # --------------------------------------------------------------------------
-# pipeline_main_ingest_to_training (prepped r18, un-registered): the
-# reference's OUTERMOST composition — main() (trainer/flax_model.py:403-412)
-# — the read_dataset ingest feeding the train_and_evaluate driver
+# pipeline_main_ingest_to_training: the reference's OUTERMOST composition —
+# main() (trainer/flax_model.py:403-412), the read_dataset ingest feeding
+# the train_and_evaluate driver
 # --------------------------------------------------------------------------
 
 
@@ -4188,12 +3751,6 @@ def main_ingest_to_training(
     x92-x95 chain), save_predictions / checkpoints / metrics (the
     sinks), train_and_evaluate (the driver), and main() (this).
 
-    Prepped r18, un-registered (the r18 window is spent on the two
-    sanctioned capstones + rotation): registration is one line,
-    ``query("pipeline_main_ingest_to_training",
-    oracle=_main_oracle())(main_ingest_to_training)`` — queued first
-    for r19.
-
     Scale design: the ingest leg is one Arrow decode pass + one
     patch-keyed agg (stats broadcast back); the example census is
     patch-bounded adjacency, one (node_a, node_b) shuffle; negatives
@@ -4287,6 +3844,6 @@ def _main_oracle(
     )
 
 
-# Registration queued FIRST for r19 (VERDICT r17 #5 — the last seam):
-# query("pipeline_main_ingest_to_training",
-#       oracle=_main_oracle())(main_ingest_to_training)
+query("pipeline_main_ingest_to_training", oracle=_main_oracle())(
+    main_ingest_to_training
+)

@@ -1134,8 +1134,8 @@ def s22_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- pipeline_read_dataset_split (prepped r17, un-registered): the
-# --- reference's full read_dataset — scan → parse → impute → split --------
+# --- pipeline_read_dataset_split: the reference's full read_dataset —
+# --- scan → parse → impute → split -----------------------------------------
 
 _RD_SHARDS = 4
 _RD_PATCHES = 8
@@ -1213,11 +1213,6 @@ def read_dataset_split(
     int(n · ratio)`` over global patch order (:125-131, the o3 shape).
     Output: one row per patch — (split, shard, patch_idx, n_cells,
     n_invalid, lst_mean) with lst_mean over the IMPUTED cells.
-
-    Prepped r17, un-registered: queued for a free window slot with the
-    other r17 preps — registration is one line,
-    ``query("pipeline_read_dataset_split",
-    oracle=_read_dataset_oracle())(read_dataset_split)``.
 
     Parity: every stored LST value (including the quantized
     replacement and the clip endpoints) is a multiple of 0.25, so all
@@ -1353,8 +1348,7 @@ def _read_dataset_oracle(train_ratio: float = _RD_RATIO) -> str:
 """
 
 
-# Registered r18 (VERDICT r17 #2's second sanctioned slot — closes the
-# reference's read_dataset seam, trainer/flax_model.py:99-144).
+# Closes the reference's read_dataset seam, trainer/flax_model.py:99-144.
 query("pipeline_read_dataset_split", oracle=_read_dataset_oracle())(
     read_dataset_split
 )

@@ -69,23 +69,3 @@ def test_all_queries_run(spark):
         df.limit(5).collect()
         _assert_no_residue(name, spark, before)
 
-
-def test_q2_q11_prep_parity(spark, con):
-    """sql_q2_min_cost_supplier / sql_q11_important_stock (prepped r18,
-    un-registered — the synthetic-partsupp pair): identical text must
-    match DuckDB exactly, like every registered query, BEFORE their
-    queued registration.  Registration recipe in each docstring."""
-    from big_data_project_spark.operators.sql_tpch import (
-        Q2_TEXT,
-        Q11_TEXT,
-        sql_q2_min_cost_supplier,
-        sql_q11_important_stock,
-    )
-
-    for name, fn, text in (
-        ("sql_q2_min_cost_supplier", sql_q2_min_cost_supplier, Q2_TEXT),
-        ("sql_q11_important_stock", sql_q11_important_stock, Q11_TEXT),
-    ):
-        res = compare(name, fn(spark, SF_DIR), con, text)
-        assert res.ok, f"{name}: {res.detail}"
-        assert res.spark_rows > 0, name

@@ -1036,10 +1036,10 @@ def test_x64_triangles_match_bruteforce(spark, sf_dir):
     must sum to exactly 3× the global count (each triangle credits all
     three vertices)."""
     from big_data_project_spark.pipeline.graph import (
-        _cooccurrence_edges, triangle_counts_per_node, triangles,
+        _cooccurrence_edges, _tri_frames, triangle_counts_per_node,
     )
 
-    tri_n = triangles(spark, sf_dir).count()
+    tri_n = _tri_frames(spark, sf_dir)[0].count()
     p = _cooccurrence_edges(spark, sf_dir)
     p1, p2, p3 = p.alias("p1"), p.alias("p2"), p.alias("p3")
     brute = (
@@ -2837,235 +2837,6 @@ def test_sgns_adam_epoch_parity_replay_and_state(spark):
         )
 
 
-def test_sgns_training_end2end_parity_replay_and_contract(spark):
-    """The full training driver composition (prepped r17,
-    un-registered — queued for a free r18 window slot per VERDICT r16
-    #4): the reference's ``train_and_evaluate``
-    (trainer/flax_model.py:295-390) as x93 epochs + x94 metrics + the
-    s6 keep-N checkpoint + the s7 metrics sink, returning only the
-    sinks' read-back.  Checks: oracle parity at BOTH tiers, a
-    pure-Python replay of the entire 8-step schedule (metrics means,
-    retention sweep, integer weight checksums), and the COMPOSITION
-    CONTRACT against the already-verified pieces — epoch 1's metrics
-    are exactly x94's rows 0..2 folded to means, and epoch 1's
-    checkpoint is the one keep=3 swept (NULL read-back)."""
-    from big_data_project_spark.pipeline.graph import (
-        _SG_DIM, _SG_EPOCH_STEPS, _TE_EPOCHS, _TE_KEEP,
-        _sgns_end2end_oracle, sgns_epoch_metrics, sgns_training_end2end,
-    )
-    from tests.conftest import SF_DIR, SF_DIR_ORACLE
-    from tests.oracle_harness import compare, duckdb_connect
-
-    oracle = _sgns_end2end_oracle()
-    for sf in (SF_DIR, SF_DIR_ORACLE):
-        with scope(spark):
-            con = duckdb_connect(sf)
-            df = sgns_training_end2end(spark, sf)
-            res = compare("pipeline_sgns_training_end2end", df, con, oracle)
-            assert res.ok, (sf, res.detail, res.mismatches[:3])
-
-    with scope(spark):
-        ex, nodes, vin, vout = _replay_sgns_setup(spark)
-        total = _TE_EPOCHS * _SG_EPOCH_STEPS
-        traj = [(vin, vout)]
-        for _ in range(total):
-            _gi, _go, nvin, nvout = _replay_sgns_step(ex, *traj[-1])
-            traj.append((nvin, nvout))
-        mets = [_replay_sgns_metrics(ex, mi, mo) for mi, mo in traj]
-
-        def wsum(state):
-            return sum(
-                int(round(w * 1e10))
-                for side in state
-                for w in side.values()
-            )
-
-        kept = set(range(_TE_EPOCHS - _TE_KEEP + 1, _TE_EPOCHS + 1))
-        expected = []
-        for e in range(1, _TE_EPOCHS + 1):
-            pre = mets[(e - 1) * _SG_EPOCH_STEPS : e * _SG_EPOCH_STEPS]
-            post = mets[e * _SG_EPOCH_STEPS]
-            tl = round(sum(m[1] for m in pre) / len(pre) + 1e-9, 6)
-            ta = round(sum(m[2] for m in pre) / len(pre) + 1e-9, 6)
-            ck = (
-                (2 * len(nodes) * _SG_DIM, wsum(traj[e * _SG_EPOCH_STEPS]))
-                if e in kept
-                else (None, None)
-            )
-            expected.append((e, tl, ta, post[1], post[2], *ck))
-
-        rows = sgns_training_end2end(spark, SF_DIR).collect()
-        got = [
-            (
-                r.epoch, r.train_loss, r.train_accuracy,
-                r.test_loss, r.test_accuracy, r.ckpt_rows, r.ckpt_wsum,
-            )
-            for r in rows
-        ]
-        assert got == expected
-
-        # composition contract vs the verified pieces: epoch 1's metrics
-        # ARE x94's rows 0..2 folded to means...
-        by_step = {r.step: r for r in sgns_epoch_metrics(spark, SF_DIR).collect()}
-        e1 = got[0]
-        assert e1[1] == round(
-            (by_step[0].loss + by_step[1].loss) / 2 + 1e-9, 6
-        )
-        assert e1[2] == round(
-            (by_step[0].accuracy + by_step[1].accuracy) / 2 + 1e-9, 6
-        )
-        assert (e1[3], e1[4]) == (by_step[2].loss, by_step[2].accuracy)
-        # ...and epoch 1's checkpoint (x93's v2 matrix) is the one the
-        # keep=3 sweep deleted
-        assert e1[5] is None and e1[6] is None
-        # the composed schedule still trains: eval loss never rises and
-        # strictly improves end-to-end
-        test_losses = [r[3] for r in got]
-        assert all(a >= b for a, b in zip(test_losses, test_losses[1:]))
-        assert test_losses[-1] < test_losses[0]
-
-
-def test_sgns_prediction_snapshots_parity_replay_and_gate(spark):
-    """The prediction sink (prepped r17, un-registered — queued behind
-    the end2end composition): the reference's ``save_predictions``
-    (trainer/flax_model.py:279-285) under its modulo epoch gate
-    (flax_model.py:380-384).  Checks: oracle parity at BOTH tiers, a
-    pure-Python replay of every snapshot row (per-example 6-dp dot +
-    clamped sigmoid at the gated epoch states), and the GATE contract —
-    ungated epochs are absent from the read-back, gated ones lossless."""
-    import math
-
-    from big_data_project_spark.pipeline.graph import (
-        _PRED_EVERY, _SG_CLAMP, _SG_DIM, _SG_EPOCH_STEPS, _TE_EPOCHS,
-        _sgns_pred_oracle, sgns_prediction_snapshots,
-    )
-    from tests.conftest import SF_DIR, SF_DIR_ORACLE
-    from tests.oracle_harness import compare, duckdb_connect
-
-    oracle = _sgns_pred_oracle()
-    for sf in (SF_DIR, SF_DIR_ORACLE):
-        with scope(spark):
-            con = duckdb_connect(sf)
-            df = sgns_prediction_snapshots(spark, sf)
-            res = compare("pipeline_sgns_prediction_snapshots", df, con, oracle)
-            assert res.ok, (sf, res.detail, res.mismatches[:3])
-
-    with scope(spark):
-        ex, _nodes, vin, vout = _replay_sgns_setup(spark)
-        state = (vin, vout)
-        states = {}
-        for e in range(1, _TE_EPOCHS + 1):
-            for _ in range(_SG_EPOCH_STEPS):
-                _gi, _go, nvin, nvout = _replay_sgns_step(ex, *state)
-                state = (nvin, nvout)
-            if e % _PRED_EVERY == 0:
-                states[e] = state
-        assert set(states) == {2, 4}  # the gate at the default schedule
-
-        expected = set()
-        for e, (mi, mo) in states.items():
-            for (c, x, label), cnt in ex.items():
-                dot = round(
-                    sum(mi[c, k] * mo[x, k] for k in range(_SG_DIM)) + 1e-9, 6
-                )
-                dc = max(min(dot, _SG_CLAMP), -_SG_CLAMP)
-                pred = round(1.0 / (1.0 + math.exp(-dc)) + 1e-9, 6)
-                expected.add((e, c, x, label, cnt, dot, pred))
-
-        rows = sgns_prediction_snapshots(spark, SF_DIR).collect()
-        got = {
-            (r.epoch, r.center, r.ctx, r.label, r.cnt, r.dot, r.pred)
-            for r in rows
-        }
-        assert got == expected
-        # gate contract: ungated epochs never reach the sink
-        assert {r.epoch for r in rows} == {2, 4}
-        # snapshots are lossless: every example appears in every snapshot
-        assert len(rows) == 2 * len(ex)
-
-
-def test_sgns_permuted_batches_parity_replay_and_sparsity(spark):
-    """x96 (prepped r17, un-registered): the reference's per-epoch
-    permutation + batch reshape + skip-incomplete-remainder
-    (trainer/flax_model.py:234-236) — one SGD step per DISTINCT
-    mini-batch, where x93/x95 step repeatedly over one shared batch.
-    Checks: oracle parity at BOTH tiers, a pure-Python replay of the
-    md5 permutation / reshape / remainder-skip / per-batch steps, and
-    the PER-BATCH SPARSITY invariant the full-batch chain never
-    exercises: a weight whose node is absent from step b's batch must
-    not move at step b."""
-    import hashlib
-
-    from big_data_project_spark.pipeline.graph import (
-        _SG_DIM, _SG_EPOCH_STEPS, _sgns_permuted_oracle,
-        sgns_permuted_batches,
-    )
-    from tests.conftest import SF_DIR, SF_DIR_ORACLE
-    from tests.oracle_harness import compare, duckdb_connect
-
-    oracle = _sgns_permuted_oracle()
-    for sf in (SF_DIR, SF_DIR_ORACLE):
-        with scope(spark):
-            con = duckdb_connect(sf)
-            df = sgns_permuted_batches(spark, sf)
-            res = compare("x96_sgns_permuted_batches", df, con, oracle)
-            assert res.ok, (sf, res.detail, res.mismatches[:3])
-
-    with scope(spark):
-        ex, nodes, vin, vout = _replay_sgns_setup(spark)
-        n_batches = _SG_EPOCH_STEPS
-        keys = sorted(
-            ex,
-            key=lambda t: hashlib.md5(
-                f"{t[0]}:{t[1]}:{int(t[2])}".encode()
-            ).hexdigest(),
-        )
-        bs = len(keys) // n_batches
-        kept = keys[: n_batches * bs]  # the skipped incomplete remainder
-        batch_exs = [
-            {key: ex[key] for key in kept[i * bs : (i + 1) * bs]}
-            for i in range(n_batches)
-        ]
-        traj = [(vin, vout)]
-        for bex in batch_exs:
-            _gi, _go, nvin, nvout = _replay_sgns_step(bex, *traj[-1])
-            traj.append((nvin, nvout))
-
-        expected = set()
-        for side, idx in (("in", 0), ("out", 1)):
-            for key in traj[0][idx]:
-                expected.add(
-                    (side, *key, *[traj[i][idx][key] for i in range(len(traj))])
-                )
-
-        rows = sgns_permuted_batches(spark, SF_DIR).collect()
-        vcols = [f"v{i}" for i in range(n_batches + 1)]
-        got = {
-            (r.side, r.node, r.k, *[r[c] for c in vcols]) for r in rows
-        }
-        assert got == expected
-        assert len(got) == 2 * len(nodes) * _SG_DIM
-
-        # per-batch sparsity: a node absent from batch b's examples
-        # receives no gradient at step b+1 and must not move
-        for b, bex in enumerate(batch_exs):
-            centers = {c for c, _x, _l in bex}
-            ctxs = {x for _c, x, _l in bex}
-            for side, idx, present in (("in", 0, centers), ("out", 1, ctxs)):
-                for (node, k), _v in traj[0][idx].items():
-                    if node not in present:
-                        assert traj[b + 1][idx][node, k] == traj[b][idx][node, k]
-        # ...and the reshape contract: equal-size DISJOINT batches
-        # covering exactly the kept prefix, each step actually training
-        assert all(len(bex) == bs for bex in batch_exs)
-        assert not set(batch_exs[0]) & set(batch_exs[1])
-        assert set(batch_exs[0]) | set(batch_exs[1]) == set(kept)
-        for i in range(len(batch_exs)):
-            assert any(
-                traj[i + 1][0][key] != traj[i][0][key] for key in traj[0][0]
-            ), f"mini-batch step {i} moved nothing"
-
-
 def test_negative_sampling_parity_and_table_invariants(spark):
     """Negative-sampling table (prepped for a future window): oracle
     parity at BOTH tiers plus the table invariants a trainer relies on —
@@ -3391,7 +3162,7 @@ def _replay_tae_expected(ex, nodes, vin, vout):
 
 
 def test_sgns_train_and_evaluate_full_fidelity(spark):
-    """pipeline_sgns_train_and_evaluate (registered r18): the
+    """pipeline_sgns_train_and_evaluate: the
     reference driver at FULL fidelity — per-epoch re-permuted
     mini-batches (flax_model.py:234-236, :350), one bias-corrected
     Adam step per distinct batch (:275), epoch metrics (:238-259,
@@ -3548,28 +3319,26 @@ def _replay_main_setup():
 
 
 def test_main_ingest_to_training_parity_replay_and_contract(spark):
-    """pipeline_main_ingest_to_training (prepped r18, un-registered):
-    the reference's OUTERMOST composition — main()
-    (trainer/flax_model.py:403-412), read_dataset's ingest feeding the
-    train_and_evaluate driver.  Checks: oracle parity at BOTH tiers;
-    the composition contract — the Spark example frame equals the
-    pure-Python ingest→example replay EXACTLY (formula cells, impute,
-    train cut, tokens, census, negatives); and the full-schedule
-    replay of the training over those examples (the factored
-    `_replay_tae_expected`)."""
+    """pipeline_main_ingest_to_training: the reference's OUTERMOST
+    composition — main() (trainer/flax_model.py:403-412), read_dataset's
+    ingest feeding the train_and_evaluate driver.  Checks: oracle parity
+    at sf0.01 (the sf0.001 tier is the registry sweep's,
+    test_oracle_parity.py); the composition contract — the Spark example
+    frame equals the pure-Python ingest→example replay EXACTLY (formula
+    cells, impute, train cut, tokens, census, negatives); and the
+    full-schedule replay of the training over those examples (the
+    factored `_replay_tae_expected`)."""
     from big_data_project_spark.pipeline.graph import (
         _main_oracle, _patch_sgns_inputs, main_ingest_to_training,
     )
     from tests.conftest import SF_DIR, SF_DIR_ORACLE
     from tests.oracle_harness import compare, duckdb_connect
 
-    oracle = _main_oracle()
-    for sf in (SF_DIR, SF_DIR_ORACLE):
-        with scope(spark):
-            con = duckdb_connect(sf)
-            df = main_ingest_to_training(spark, sf)
-            res = compare("pipeline_main_ingest_to_training", df, con, oracle)
-            assert res.ok, (sf, res.detail, res.mismatches[:3])
+    with scope(spark):
+        con = duckdb_connect(SF_DIR_ORACLE)
+        df = main_ingest_to_training(spark, SF_DIR_ORACLE)
+        res = compare("pipeline_main_ingest_to_training", df, con, _main_oracle())
+        assert res.ok, (res.detail, res.mismatches[:3])
 
     with scope(spark):
         ex, nodes, vin, vout = _replay_main_setup()

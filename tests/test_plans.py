@@ -1994,96 +1994,6 @@ def test_sgns_metrics_plan(spark):
         assert num_shuffles_steady(df) <= 6
 
 
-def test_sgns_end2end_report_plan_reads_sinks_only(spark):
-    """The train_and_evaluate composition's returned plan (prepped
-    r17): the report side reads the PARQUET SINKS ONLY — metrics log +
-    surviving checkpoints — with the entire training lineage decoupled
-    behind the writes (how a real cluster job ships metrics to
-    TensorBoard and checkpoints to object storage; the analysis query
-    must not drag the training graph).  Zero Python, no sort-merge, no
-    cartesian, and a tiny plan string (no training-lineage echo)."""
-    import re
-
-    from big_data_project_spark.pipeline.graph import sgns_training_end2end
-    from big_data_project_spark.plans.contracts import (
-        num_shuffles_steady, plan_str, prune_cached_subtrees,
-    )
-
-    with scope(spark):
-        df = sgns_training_end2end(spark, SF)
-        raw = plan_str(df, "simple")
-        assert len(raw) < 20_000, "report plan dragged the training lineage"
-        text = prune_cached_subtrees(raw)
-        assert len(re.findall(r"\bSortMergeJoin\b", text)) == 0
-        assert len(re.findall(r"\bCartesianProduct\b", text)) == 0
-        assert (
-            len(re.findall(r"\bBatchEvalPython\b|\bArrowEvalPython\b", text))
-            == 0
-        )
-        # both legs are parquet scans of the sinks
-        assert len(re.findall(r"Scan parquet", text)) == 2
-        assert num_shuffles_steady(df) <= 6
-
-
-def test_sgns_pred_snapshots_plan_scan_only(spark):
-    """The prediction-snapshot sink's read-back plan (prepped r17):
-    ONE parquet scan + the output sort — no join of any kind, zero
-    Python, and no training-lineage echo in the plan string.  The
-    predictions were scored at WRITE time (the score-and-dump side
-    output), so the review query is a pure columnar scan."""
-    import re
-
-    from big_data_project_spark.pipeline.graph import (
-        sgns_prediction_snapshots,
-    )
-    from big_data_project_spark.plans.contracts import (
-        num_shuffles_steady, plan_str, prune_cached_subtrees,
-    )
-
-    with scope(spark):
-        df = sgns_prediction_snapshots(spark, SF)
-        raw = plan_str(df, "simple")
-        assert len(raw) < 12_000, "read-back plan dragged the training lineage"
-        text = prune_cached_subtrees(raw)
-        assert len(re.findall(r"Join", text)) == 0
-        assert (
-            len(re.findall(r"\bBatchEvalPython\b|\bArrowEvalPython\b", text))
-            == 0
-        )
-        assert len(re.findall(r"Scan parquet", text)) == 1
-        assert num_shuffles_steady(df) <= 2  # only the output sort
-
-
-def test_sgns_permuted_batches_plan(spark):
-    """x96's plan (prepped r17): the permutation/reshape runs once
-    behind the examples frame's localCheckpoint leaf (its single-
-    partition rank window over the batch-bounded frame never appears
-    in the output plan), each mini-batch step keeps x93's exchange
-    structure, and the output is the broadcast trajectory walk over
-    checkpoint leaves — zero Python, zero sort-merge, ≤2 steady
-    shuffles, plan string inside the default-1g-driver bound."""
-    import re
-
-    from big_data_project_spark.pipeline.graph import sgns_permuted_batches
-    from big_data_project_spark.plans.contracts import (
-        num_shuffles_steady, plan_str, prune_cached_subtrees,
-    )
-
-    with scope(spark):
-        df = sgns_permuted_batches(spark, SF)
-        raw = plan_str(df, "simple")
-        assert len(raw) < 40_000, "x96 plan string regrew — lineage leak"
-        text = prune_cached_subtrees(raw)
-        assert len(re.findall(r"\bSortMergeJoin\b", text)) == 0
-        assert len(re.findall(r"\bCartesianProduct\b", text)) == 0
-        assert (
-            len(re.findall(r"\bBatchEvalPython\b|\bArrowEvalPython\b", text))
-            == 0
-        )
-        assert len(re.findall(r"\bBroadcastHashJoin\b", text)) >= 4
-        assert num_shuffles_steady(df) <= 2  # only the output sort
-
-
 def test_sgns_adam_epoch_plan_constant_in_steps(spark):
     """x95's scale claim (prepped r16): the per-step Adam state
     localCheckpoints, so the OUTPUT plan is nothing but the broadcast
@@ -2119,7 +2029,7 @@ def test_sgns_adam_epoch_plan_constant_in_steps(spark):
 
 
 def test_read_dataset_split_plan(spark):
-    """The read_dataset composition's plan (prepped r17): the npz
+    """The read_dataset composition's plan: the npz
     corpus streams through exactly ONE Arrow decode pass (the only
     Python), the per-patch stats broadcast back into the cell-level
     impute join (never sort-merged), and the split is a pure
@@ -2148,7 +2058,7 @@ def test_read_dataset_split_plan(spark):
 
 
 def test_sgns_train_and_evaluate_report_plan(spark):
-    """The full-fidelity trainer's report plan (prepped r17): all
+    """The full-fidelity trainer's report plan: all
     three sinks — metrics log, kept optimizer-state checkpoints, gated
     prediction snapshots — read back as pure parquet scans with the
     training lineage fully decoupled; zero Python, no sort-merge, and
@@ -2177,7 +2087,7 @@ def test_sgns_train_and_evaluate_report_plan(spark):
 
 
 def test_main_ingest_to_training_plans(spark):
-    """The main() composition's plan contracts (prepped r18): (1) the
+    """The main() composition's plan contracts: (1) the
     ingest leg decodes in EXACTLY one Arrow pass (a single MapInPandas
     over the binary shard scan) with the impute stats broadcast back
     — no sort-merge, no cartesian; (2) the returned report plan is the
@@ -2220,8 +2130,9 @@ def test_main_ingest_to_training_plans(spark):
         assert num_shuffles_steady(df) <= 8
 
 
-def test_q2_q11_partsupp_prep_plans(spark):
-    """The synthetic-partsupp pair (prepped r18, un-registered).  Q2: the
+def test_q2_q11_partsupp_plans(spark):
+    """The synthetic-partsupp pair, run through their registered entry
+    points; both must return rows at this tier.  Q2: the
     correlated min-cost subquery must decorrelate — zero cartesian
     products, and every nested-loop join in the plan can only be one of
     the constant-size generator sides (the 1-row supplier count / 4-row
@@ -2232,13 +2143,11 @@ def test_q2_q11_partsupp_prep_plans(spark):
     group."""
     import re
 
-    from big_data_project_spark.operators.sql_tpch import (
-        sql_q2_min_cost_supplier,
-        sql_q11_important_stock,
-    )
     from big_data_project_spark.plans.contracts import plan_str
 
-    q2 = sql_q2_min_cost_supplier(spark, SF)
+    qs = all_queries()
+    q2 = qs["sql_q2_min_cost_supplier"](spark, SF)
+    assert q2.count() > 0
     t2 = plan_str(q2, "simple")
     assert count_ops(q2, "CartesianProduct") == 0
     assert "TakeOrderedAndProject" in t2, t2[:2000]
@@ -2253,7 +2162,7 @@ def test_q2_q11_partsupp_prep_plans(spark):
         if "BroadcastNestedLoopJoin" in line:
             assert "Cross" in line, line
 
-    q11 = sql_q11_important_stock(spark, SF)
+    q11 = qs["sql_q11_important_stock"](spark, SF)
     assert count_ops(q11, "CartesianProduct") == 0
     assert has_partial_agg(q11)
     # static plan: the grouped CTE appears under BOTH its consumers (the
@@ -2262,6 +2171,6 @@ def test_q2_q11_partsupp_prep_plans(spark):
     assert num_shuffles(q11) <= 6, num_shuffles(q11)
     # runtime contract: AQE must collapse the duplicated ps_partkey agg
     # exchange via reuse, so the fact-side aggregation executes ONCE
-    q11.collect()
+    assert q11.collect()
     executed = q11._jdf.queryExecution().executedPlan().toString()
     assert "ReusedExchange" in executed
