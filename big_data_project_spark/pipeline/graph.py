@@ -1338,29 +1338,41 @@ def kcore_peel(
     structural dual (monotone shrinking alive set instead of a monotone
     growing reached set).
 
-    Each sweep is two integer semi-joins (restrict edges to surviving
-    endpoints), one partial-aggregated degree count, and one anti-join
+    Each sweep is one integer semi-join (restrict edges to surviving
+    v endpoints), one partial-aggregated degree count, and one anti-join
     (the removed delta); every exchange carries bare integer node ids —
     never adjacency lists.  Alive-but-isolated nodes (all neighbours
     already peeled) vanish from the degree frame and are therefore
     removed, as 0 < kk requires.  The threshold stays a lazily
     broadcast 1-row frame, so data-derived thresholds (mean degree,
-    a percentile) never touch the driver.  Each sweep's alive frame is
-    persisted — it is read three times (two semi-joins, the removed
-    anti-join) and, as with bfs_layers, persist() bounds recomputation
-    but NOT plan size: the triple self-reference grows the
-    un-checkpointed logical tree exponentially in rounds, so past ~10
-    sweeps set ``checkpoint_every`` (the pagerank_ranks_deep cadence);
+    a percentile) never touch the driver.
+
+    The u endpoint needs no alive check: the `deg >= kk` filter alone
+    yields the next alive set.  A node removed at sweep s had fewer than
+    kk alive neighbours then (or none); the alive set only shrinks
+    afterwards, so its count of alive neighbours can only fall and it
+    never passes the filter again.  Every node in `deg` is a u of
+    `edges`, i.e. in the first alive set, so by induction each sweep's
+    survivors are a subset of the previous alive set and equal the
+    two-endpoint definition's (the DuckDB mirror `_kcore_ctes` and the
+    Python peels in the tests keep both checks).
+
+    Each sweep's alive frame is persisted — it is read twice (the
+    semi-join, the removed anti-join) and, as with bfs_layers,
+    persist() bounds recomputation but NOT plan size: every sweep's
+    plan holds the previous sweep's twice, so the un-checkpointed plan
+    grows polynomially in rounds (on a 40-node path the analyzed plan
+    is ~140k chars at 8 sweeps, ~25k with a cadence of 3, and ~350k at
+    12 sweeps, which take ~50 s to plan and run on 4 cores).  For deep
+    runs set ``checkpoint_every`` (the pagerank_ranks_deep cadence);
     exactly value-equivalent at any cadence — all-integer set algebra.
     Callers should persist `edges` and own cache cleanup."""
     alive = edges.select(F.col("u").alias("node")).distinct().persist()
     labels = []
     for r in range(1, rounds + 1):
-        au = alive.select(F.col("node").alias("au"))
         av = alive.select(F.col("node").alias("av"))
         deg = (
-            edges.join(au, edges.u == F.col("au"), "left_semi")
-            .join(av, edges.v == F.col("av"), "left_semi")
+            edges.join(av, edges.v == F.col("av"), "left_semi")
             .groupBy("u")
             .agg(F.count(F.lit(1)).alias("deg"))
         )
@@ -1410,15 +1422,15 @@ def kcore_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     removed deltas) integer rows; the threshold is a 1-row broadcast
     computed from two scalar aggregates of the persisted edge frame —
     no driver-side collect anywhere, the whole fixed-sweep loop is one
-    lazy job.  The alive chain persists per sweep (read 3× each — see
+    lazy job.  The alive chain persists per sweep (read 2× each — see
     kcore_peel); the census union reads each removed delta once.
     Cache contract: the registry entry point clearCache()s on entry;
     composing callers own cleanup."""
     # Cached edge frame pre-partitioned (and pre-sorted) on u — the
-    # x51/x65/x67/x68 layout: each sweep's u-side semi-join and the
-    # degree groupBy(u) read the cache exchange-free at cluster scale
-    # (the v-side semi-join's exchange is inherent; see
-    # plans/r18/cached_partitioning_probe.txt for the mechanism).
+    # x51/x65/x67/x68 layout: each sweep's degree groupBy(u) reads the
+    # cache exchange-free at cluster scale (the v-side semi-join's
+    # exchange is inherent; see plans/r18/cached_partitioning_probe.txt
+    # for the mechanism).
     edges = (
         _copurchase_weighted_edges(spark, sf_dir)
         .repartition(spark.sparkContext.defaultParallelism, "u")

@@ -305,9 +305,9 @@ def test_kcore_deep_checkpoint_cadence_value_equivalent(spark):
     run's labels (all-integer set recurrence — cadence cannot change
     values): endpoints peel outside-in two nodes per sweep from each
     end, survivors peel_round 0; and each checkpoint must truncate the
-    plan.  The lazy arm stays at 8 sweeps for the same reason as the
-    BFS cadence test: the alive chain's triple self-reference grows the
-    un-checkpointed plan tree exponentially per sweep."""
+    plan.  The lazy arm stays at 8 sweeps: each sweep's plan holds the
+    previous sweep's twice (semi-join and removed anti-join), so the
+    un-checkpointed plan tree grows with every sweep."""
     from pyspark.sql import functions as F
 
     from big_data_project_spark.pipeline.graph import kcore_peel
